@@ -25,8 +25,6 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,50 +44,6 @@ from automotive_data_pipeline_demo_spark.functions.parallelism import fan_out
 # cap is the 100 TB-safe default and ``max_doc_freq=None`` is the explicit
 # exact-mode opt-out (used by the oracle-pinned catalog entries).
 DEFAULT_MAX_DOC_FREQ = 1000
-
-# Shared-subtree policy for scrub_shared_spans' untouched/touched split
-# (both union branches consume the starts-joined frame): "both" (r14
-# shape — persist+eager-fill the folded starts AND the joined frame),
-# "both_lazy" (persist both, no serializing counts — r15 candidate),
-# "starts" (persist only the small starts fold), "off" (r13 shape:
-# every branch recomputes the post-collapse chain). Internal A/B knob,
-# same contract as similarity._SHARE_MARKED (env override
-# SPARK_GRAFT_SCRUB_PIN for cold-JVM A/Bs and cluster deployment).
-_SCRUB_PIN = os.environ.get("SPARK_GRAFT_SCRUB_PIN", "both")
-
-# Key representation for the candidate-verify array joins in
-# ngram_jaccard_pairs: "hash128" ships the shingle arrays through the
-# two per-side exchanges as 16-byte two-long structs (the arrays only
-# feed array_intersect counts — internal equality keys, r13 hash128
-# class); "text" (default) is the raw-shingle-string shape. hash128
-# was A/B'd cold at sf10p and REJECTED: despite halving the two
-# verify exchanges' bytes, `F.transform(__sh, hash128)` is a
-# higher-order function — interpreted, outside whole-stage codegen
-# (the repo's own measured 13x HOF gotcha) — and the per-element
-# hashing over both join sides cost more than the narrower exchange
-# saved (min-of-4: pipeline 14.50 vs text 11.36 s, curation capped
-# 25.87 vs 24.08 s). Kept as a knob because the trade flips if the
-# network is the binding constraint (a real cluster's exchanges cross
-# NICs; local[32] exchanges are memcpy).
-_VERIFY_KEY = os.environ.get("SPARK_GRAFT_VERIFY_KEY", "text")
-
-# Shared-subtree policy for connected_components' distributed loop:
-# each round's pointer-jump is a SELF-join of the propagated labels
-# (`prop`), and without a pin both join sides materialize the
-# neighbor-hop join + groupBy subtree independently — the r15 sf10p
-# profile showed twin stages with identical bytes once per round
-# (s308/s309, s333/s334 ...). "fill" (default since r15) persists
-# prop and serializes its fill with one bounded count before the
-# join's concurrently materialized sides race it (released per round
-# after the convergence action); "off" is the pre-r15 shape. Only
-# graphs past the driver union-find bound (>1e6 edges) ever run this
-# loop. Cold A/B at sf10p (x_dedup_semdedup, the one smoke entry that
-# crosses the bound): fill 12.64 vs off 15.94 s min-of-4, every
-# session agreeing — the OPPOSITE call from the semdedup_inc marked
-# frame because prop is two longs per vertex (tiny cache write) while
-# the duplicated subtree is the round's whole neighbor-hop join +
-# fold; the per-site rule, not a uniform policy.
-_CC_PROP = os.environ.get("SPARK_GRAFT_CC_PROP", "fill")
 
 
 def hash128(col: Column | str) -> Column:
@@ -704,44 +658,25 @@ def ngram_jaccard_pairs(
                 F.array_sort(word_shingles(F.col(text_col), shingle_n)).alias("__sh"),
             ).withColumn("__sz", F.size("__sh")).persist()
             held.append(arr)
-        # r15 (guide §2.3, shuffle fewer bytes): the two candidate joins
-        # EXCHANGE the per-doc shingle arrays (hash by id_a, then id_b —
-        # at sf10p each exchange wrote 466 MB and the pair of stages was
-        # 15 s of the pipeline's 18 s). The arrays only feed the
-        # array_intersect COUNT, i.e. they are internal equality keys —
-        # so ship them as 16-byte hash128 structs instead of shingle
-        # strings (~2x narrower rows through both exchanges, and the
-        # per-pair intersect compares two-long structs instead of
-        # strings). Same convention and collision class as the r13 gram
-        # keys: a 2^-128 collision would perturb one pair's n_common by
-        # one; the oracle replays shingle TEXT, so parity rests on
-        # collision-freeness exactly like scrub's span keys. __sz still
-        # counts the original distinct-shingle set. _VERIFY_KEY="text"
-        # restores the r14 shape (A/B knob + deployment override).
-        if _VERIFY_KEY == "hash128":
-            karr = arr.select(
-                "id",
-                F.transform("__sh", hash128).alias("__shk"),
-                "__sz",
-            )
-        else:
-            karr = arr.select(
-                "id", F.col("__sh").alias("__shk"), "__sz"
-            )
+        # The verify joins exchange the raw shingle arrays. Hashing them
+        # to hash128 first halved the two exchanges' bytes but cost more
+        # in per-element F.transform work than it saved (cold min-of-4 at
+        # sf10p, hash128 vs text: pipeline 14.50 vs 11.36 s, curation
+        # 25.87 vs 24.08 s).
         scored = (
             candidates.select("id_a", "id_b")
             .join(
-                karr.select(
+                arr.select(
                     F.col("id").alias("id_a"),
-                    F.col("__shk").alias("__sh_a"),
+                    F.col("__sh").alias("__sh_a"),
                     F.col("__sz").alias("size_a"),
                 ),
                 "id_a",
             )
             .join(
-                karr.select(
+                arr.select(
                     F.col("id").alias("id_b"),
-                    F.col("__shk").alias("__sh_b"),
+                    F.col("__sh").alias("__sh_b"),
                     F.col("__sz").alias("size_b"),
                 ),
                 "id_b",
@@ -1181,12 +1116,12 @@ def connected_components(
             )
         )
         prop = cand.groupBy("id").agg(F.min("label").alias("label"))
-        if _CC_PROP == "fill":
-            # both sides of the pointer-jump self-join below read prop;
-            # see _CC_PROP. The count is one extra bounded job per
-            # round; the cache is released right after the round's
-            # convergence action materializes the new labels.
-            prop = eager_fill(prop.persist())
+        # Both sides of the pointer-jump self-join below read prop; an
+        # unpinned prop recomputes the neighbor-hop join + fold once per
+        # side. prop is two longs per vertex, so the fill is cheap (cold
+        # min-of-4 at sf10p, x_dedup_semdedup: fill 12.64 vs off 15.94 s).
+        # The cache is released after the round's convergence action.
+        prop = eager_fill(prop.persist())
         # pointer jump: follow label -> label(label). Every label value is
         # itself a vertex id (labels start as ids and move as mins of ids),
         # so the lookup is a self-join on the label column.
@@ -1202,8 +1137,7 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if _CC_PROP == "fill":
-            prop.unpersist()
+        prop.unpersist()
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -1605,33 +1539,21 @@ def scrub_shared_spans(
     # once per branch. Persist BOTH the folded starts (small: one int
     # array per touched text) and the joined frame (token arrays at
     # distinct-content grain), eager-filled so AQE's concurrent branch
-    # materialization reads cache instead of racing the fill. Interleaved
-    # in-process A/B at sf10p (quiet box, min across runs): no pin 33.8 s,
-    # starts only 16.9 s, starts+joined 13.2 s — 2.6x; re-adjudicated at
-    # round close via _SCRUB_PIN min-of-4 on a regenerated probe corpus:
-    # off 39.9 s / starts 20.1 s / both 14.7 s, same ordering. Both frames are
-    # registered on the result for release_caches; MEMORY_AND_DISK default
-    # spills rather than recomputing the regexp/window chain at scale.
-    starts_per_doc = hot_starts.groupBy("__th").agg(
-        F.collect_list("start").alias("__starts")
+    # materialization reads cache instead of racing the fill. Cold
+    # min-of-4 at sf10p: no pin 39.9 / starts only 20.1 / both 14.7 s.
+    # Both frames are registered on the result for release_caches; the
+    # MEMORY_AND_DISK default spills rather than recomputing the
+    # regexp/window chain at scale.
+    starts_per_doc = eager_fill(
+        hot_starts.groupBy("__th")
+        .agg(F.collect_list("start").alias("__starts"))
+        .persist()
     )
-    if _SCRUB_PIN == "both_lazy":
-        starts_per_doc = starts_per_doc.persist()
-        joined = base.select("__th", "__ids", "__toks").join(
-            starts_per_doc, "__th", "left"
-        ).persist()
-    else:
-        if _SCRUB_PIN.startswith(("starts", "both")):
-            starts_per_doc = eager_fill(starts_per_doc.persist())
-        joined = base.select("__th", "__ids", "__toks").join(
-            starts_per_doc, "__th", "left"
-        )
-        if _SCRUB_PIN == "both":
-            joined = eager_fill(joined.persist())
-        elif _SCRUB_PIN == "both_ser":
-            from pyspark import StorageLevel
-
-            joined = eager_fill(joined.persist(StorageLevel.MEMORY_AND_DISK))
+    joined = eager_fill(
+        base.select("__th", "__ids", "__toks")
+        .join(starts_per_doc, "__th", "left")
+        .persist()
+    )
     untouched = joined.filter(F.col("__starts").isNull()).select(
         F.explode("__ids").alias("id"),
         F.size("__toks").cast("long").alias("n_tokens"),

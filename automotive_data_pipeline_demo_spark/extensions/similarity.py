@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import logging
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,27 +28,6 @@ from automotive_data_pipeline_demo_spark.functions.caching import (
 from automotive_data_pipeline_demo_spark.functions.parallelism import fan_out
 
 _log = logging.getLogger(__name__)
-
-# Shared-subtree policy for the unconditional collapse modes of
-# _near_dup_pairs_collapsed when new_col is set (the one case where the
-# branches cannot share via ReuseExchange): "fill" (persist the windowed
-# frame and eager-fill it before the branches fan out), "lazy" (persist
-# only; racing first-consumers may duplicate the fill), "off" (r13
-# shape: every branch recomputes). Default LAZY since r15: the r14
-# "fill" default was re-adjudicated with the driver's own cold-JVM
-# min-of-2 methodology (tools/ab_r15.py, 4 interleaved sessions per
-# variant) and measured worst at BOTH scales — sf0.1 min 2.78 vs lazy
-# 2.56 / off 2.59 on x_dedup_semdedup_inc, and at sf10p a heavy bad
-# tail (sessions of 22.3 / 10.4 / 10.4 s vs lazy's 8.7 / 7.5): the
-# serializing count() plus the corpus-scale cache write of a frame
-# carrying the embedding vectors is exactly the driver-measured r14
-# regression (VERDICT r14 items 1-2). The race lazy admits duplicates
-# at most one window fill and is bounded by off's recompute; "fill"
-# stays available per-deployment via SPARK_GRAFT_SHARE_MARKED for
-# clusters where a duplicated fill provably costs more than the
-# serialized action. (tools/ab_shapes_r14.py flips the module constant
-# in-process; the env var flips it per-subprocess.)
-_SHARE_MARKED = os.environ.get("SPARK_GRAFT_SHARE_MARKED", "lazy")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -835,57 +813,48 @@ def _near_dup_pairs_collapsed(
     else:
         marked = keyed.withColumn("__rep", F.min(id_col).over(w))
 
-    share_marked = _SHARE_MARKED != "off" and (
-        (collapse in ("star", "exact") and new_col is not None)
-        or collapse == "auto"
-    )
-    if share_marked:
-        # r14 (guide §2.4/§5): the rep-pair and star/member branches are
-        # SEPARATE consumers of `marked`. With new_col set their pruned
-        # window subtrees differ (the rep branch keeps __repnew, the
-        # member branch keeps __nb/__rep), so the exchange subtrees no
-        # longer canonicalize equal and ReuseExchange does NOT fire —
-        # the whole scan → assignment → hash(block) exchange → window
-        # chain executed once per branch (r14 sf10p profile: two 38-48 s
-        # assignment-scale jobs). Persisting the windowed frame computes
-        # it once (modulo a bounded fill race under the r15 lazy
-        # default — see _SHARE_MARKED: the r14 eager fill was
-        # re-adjudicated cold and its serializing count() + the
-        # corpus-scale cache write measured as the driver's r14
-        # regression; the persist itself stays, the extra action goes).
-        # Cache partitioning is hash(block), so
-        # the blocked scorer still consumes it without a new exchange.
+    if collapse == "auto" or (
+        collapse in ("star", "exact") and new_col is not None
+    ):
+        # The rep-pair and star/member branches are SEPARATE consumers of
+        # `marked`. With new_col set their pruned window subtrees differ
+        # (the rep branch keeps __repnew, the member branch keeps
+        # __nb/__rep), so the exchange subtrees no longer canonicalize
+        # equal and ReuseExchange does NOT fire — the whole scan →
+        # assignment → hash(block) exchange → window chain executed once
+        # per branch (sf10p profile: two 38-48 s assignment-scale jobs).
+        # Persisting the windowed frame computes it once. The persist is
+        # lazy: racing first consumers may duplicate at most one window
+        # fill, which is bounded by the unpinned recompute. An eager fill
+        # serializes a count() and a corpus-scale cache write of a frame
+        # carrying the embedding vectors, and measured worst at both
+        # scales (cold min-of-2 on x_dedup_semdedup_inc, 4 interleaved
+        # sessions: sf0.1 fill 2.78 / lazy 2.56 / off 2.59 s; sf10p fill
+        # sessions 22.3 / 10.4 / 10.4 vs lazy 8.7 / 7.5 s). Cache
+        # partitioning is hash(block), so the blocked scorer still
+        # consumes it without a new exchange.
         # WITHOUT new_col the branches DO canonicalize equal and
         # ReuseExchange already shares everything below the exchange —
         # there the persist only replaces a cheap window recompute with
         # a corpus-scale cache write (measured LOSS: 18.53 s vs 16.57 s
-        # at sf10p), so for the UNCONDITIONAL star/exact modes the r11
-        # ReuseExchange contract stays and the persist applies only to
-        # the new_col form.
+        # at sf10p), so the unconditional star/exact modes rely on
+        # ReuseExchange and the persist applies only to the new_col form.
         #
-        # r15 (VERDICT r14 item 4): the AUTO fall-through — the flood
-        # gate fired and the call continues as mode="exact" — now also
-        # shares the windowed frame. Here ReuseExchange shares only the
-        # exchange below the window: each of the FIVE exact-expansion
-        # readers (reps, mem x2, ga, gb) re-ran sort+window over the
-        # cached keyed frame. Persisting `marked` computes the window
-        # once; after the eager fill the keyed pin is released — the
-        # marked cache strictly contains it, so cache pressure does not
-        # double (the r14 objection to holding both).
+        # The AUTO fall-through — the flood gate fired and the call
+        # continues as mode="exact" — also shares the windowed frame.
+        # Here ReuseExchange shares only the exchange below the window:
+        # each of the FIVE exact-expansion readers (reps, mem x2, ga, gb)
+        # re-ran sort+window over the cached keyed frame.
         marked = marked.persist()
-        if _SHARE_MARKED == "fill" or collapse == "auto":
-            # The AUTO fall-through eager-fills REGARDLESS of the
-            # fill/lazy knob: the gate's stats pass already warmed the
-            # keyed cache, so this fill is one cheap window-over-cache
-            # pass (none of the cold-input cost that makes "fill" lose
-            # on the unconditional modes), and the eager fill is what
-            # legalizes releasing the keyed pin — the marked cache
-            # strictly contains it, so holding both would double cache
-            # pressure. Cold A/B (r15, sf10p): fill 3.60 / lazy 3.72 /
-            # off 3.94 s on x_dedup_flood_collapse.
+        if collapse == "auto":
+            # The gate's stats pass already warmed the keyed cache, so
+            # this fill is one cheap window-over-cache pass, and the
+            # eager fill is what legalizes releasing the keyed pin — the
+            # marked cache strictly contains it, so holding both would
+            # double cache pressure. Cold A/B at sf10p on
+            # x_dedup_flood_collapse: fill 3.60 / lazy 3.72 / off 3.94 s.
             eager_fill(marked)
-            if collapse == "auto":
-                keyed.unpersist()
+            keyed.unpersist()
 
     reps = marked.filter(F.col(id_col) == F.col("__rep"))
     eblk = block_col

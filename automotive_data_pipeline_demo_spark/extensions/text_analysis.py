@@ -13,14 +13,11 @@ shuffle at all unless the caller aggregates afterwards.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from automotive_data_pipeline_demo_spark.functions.caching import (
-    eager_fill,
     register_caches,
 )
 from automotive_data_pipeline_demo_spark.functions.parallelism import fan_out
@@ -31,22 +28,6 @@ import pandas as pd
 
 TOKEN_SPLIT = r"[^a-zA-Z0-9]+"  # separator form; tokens are [a-z0-9]+ runs
 
-# Shared-subtree policy for source_drift_report's (source, bin) fold —
-# the ONE corpus-grain aggregate of the report, read by 4 post-aggregate
-# consumers: "fill" (r14 shape — persist + eager-fill before the
-# consumers fan out), "lazy" (persist only), "off" (r13 shape: each
-# consumer recomputes the fold). Default LAZY since r15 (cold-JVM
-# driver-methodology A/B, min over 4 interleaved sessions,
-# x_dedup_semdedup_drift): sf0.1 lazy 1.66 vs fill 1.80 vs off 1.69 —
-# the r14 fill default's extra count() action is exactly the
-# driver-measured sf0.1 regression — while at sf10p the PERSIST is the
-# load-bearing half (off 6.88 s: the four consumers race the
-# lazily-persisted assignment input's fill, each recompute an
-# assignment-scale pass; lazy 5.04, fill 4.59). "fill" stays the
-# documented override (SPARK_GRAFT_DRIFT_PIN) for clusters where the
-# serialized fill's latency is provably under the duplicated-fill
-# cost. Same A/B-knob contract as similarity._SHARE_MARKED.
-_DRIFT_PIN = os.environ.get("SPARK_GRAFT_DRIFT_PIN", "lazy")
 TOKEN_RUN = "[a-z0-9]+"
 
 
@@ -801,7 +782,6 @@ def source_drift_report(
     value_col: str,
     bin_width: int = 100,
     quant: float = 1e9,
-    pin: str | None = None,
 ) -> DataFrame:
     """Per-source distribution-drift report against the whole corpus.
 
@@ -850,27 +830,15 @@ def source_drift_report(
     # makes the corpus pass happen once; the cache is post-aggregate and
     # bounded, the right artifact to hold at any scale (guide §2.4: share
     # one exchange across same-keyed consumers).
-    # ``pin`` lets a CALLER override the shared-fold policy when it
-    # knows its input's recompute cost (default: the module knob). No
-    # in-repo caller overrides today: "off" was A/B'd 27-33% faster on
-    # the narrow-scan caller (x_corpus_drift) at local bench scales and
-    # rejected — the off-plan re-scans the corpus once per unshared
-    # consumer (5 FileScans in the executed plan), a bench-scale-only
-    # win that inverts at 100 TB where the bounded (source, bin) cache
-    # is the right artifact. See q_x_corpus_drift's note.
-    if pin is None:
-        pin = _DRIFT_PIN
-    sb = binned.groupBy("source", "bin").agg(F.count(F.lit(1)).alias("n_sb"))
-    if pin != "off":
-        sb = sb.persist()
-        if pin == "fill":
-            # Eager fill (caching.eager_fill): the downstream consumers
-            # (s_tot exchange, c_bin/c_tot broadcasts) materialize
-            # concurrently under AQE and would race the lazy cache fill,
-            # re-running the corpus fold; one bounded count serializes
-            # it. Same eager class as the builder-side
-            # emb.count()/centroid pulls adjudicated r11-r13.
-            eager_fill(sb)
+    # The persist is lazy: an eager fill's extra count() lost at sf0.1
+    # and an unpinned fold re-scans the corpus once per consumer (cold
+    # min-of-4, x_dedup_semdedup_drift: sf0.1 lazy 1.66 / fill 1.80 /
+    # off 1.69 s; sf10p off 6.88 / lazy 5.04 / fill 4.59 s).
+    sb = (
+        binned.groupBy("source", "bin")
+        .agg(F.count(F.lit(1)).alias("n_sb"))
+        .persist()
+    )
     s_tot = sb.groupBy("source").agg(F.sum("n_sb").alias("n_s"))
     c_bin = sb.groupBy("bin").agg(F.sum("n_sb").alias("n_b"))
     c_tot = F.broadcast(c_bin.agg(F.sum("n_b").alias("n_c")))

@@ -34,17 +34,6 @@ from automotive_data_pipeline_demo_spark.functions.parallelism import (  # noqa:
     fan_out,
 )
 
-import os as _os
-
-# Shared-subtree policy for x_text_line_dedup_inc's framed daily batch
-# (read by its digest aggregate, line_dedup's exploded line stream, and
-# the doc-grain rebuild join): "fill" (r14 shape — persist+eager-fill),
-# "lazy" (persist only), "off" (r13: three framing passes). Same
-# A/B-knob contract as similarity._SHARE_MARKED; env override
-# SPARK_GRAFT_LINE_INC_PIN.
-_LINE_INC_PIN = _os.environ.get("SPARK_GRAFT_LINE_INC_PIN", "fill")
-
-
 # --------------------------------------------------------------------------
 # Round-4 extensions: quantized ANN, model-based quality gate, Z-order layout,
 # encrypted vendor inbox (S3/S4 in-engine analog)
@@ -771,16 +760,13 @@ def q_x_corpus_drift(spark: SparkSession, sf: str) -> DataFrame:
     change the hash.
     """
     docs = _t(spark, sf, "documents")
-    # Default pin (lazy persist since r15). pin="off" was A/B'd 27-33%
-    # faster here at BOTH bench scales (0.45/0.79 s vs lazy 0.62/0.98
-    # at sf0.1/sf10p) and REJECTED: the executed off-plan re-scans the
-    # corpus five times (3 ReusedExchange, 5 FileScans —
-    # plans/r15/x_corpus_drift_off_rejected_executed.txt), which only reads
-    # cheap because the two pruned columns of a local parquet file are
-    # page-cached; at 100 TB those are four extra corpus-column scans.
-    # The bounded (source, bin) cache is the scale-correct artifact,
-    # and this entry is not in the bench set, so the local win would
-    # not even be driver-visible.
+    # source_drift_report lazily persists its (source, bin) fold. An
+    # unpinned fold read 27-33% faster here at both bench scales (0.45/0.79
+    # s vs 0.62/0.98 at sf0.1/sf10p) and was rejected: its executed plan
+    # re-scans the corpus five times (3 ReusedExchange, 5 FileScans —
+    # plans/r15/x_corpus_drift_off_rejected_executed.txt), which only
+    # reads cheap because the two pruned columns of a local parquet file
+    # are page-cached; at 100 TB those are four extra corpus-column scans.
     return source_drift_report(docs, "source", "n_chars", bin_width=100)
 
 
@@ -1816,19 +1802,16 @@ def q_x_text_line_dedup_inc(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"), framed.alias("ftext")
     )
     corpus = base.filter(F.col("doc_id") < 400)
-    # r14 (guide §2.4/§5): the framed BATCH is read three times per run —
-    # its own digest-counts aggregate, line_dedup's exploded line stream,
-    # and line_dedup's doc-grain rebuild join — and the framing transform
+    # The framed BATCH is read three times per run — its own
+    # digest-counts aggregate, line_dedup's exploded line stream, and
+    # line_dedup's doc-grain rebuild join — and the framing transform
     # (split + 8-word re-slice + array_join) is the entry's dominant
-    # narrow work, so each re-read re-paid it (the r14 profile's 3x
-    # corpus scan). Persist + eager-fill computes it once; the batch is
-    # the DAILY INCREMENT, bounded by posture, so caching it is the
-    # scale-safe side (the corpus slice stays single-pass, uncached).
-    batch = base.filter(F.col("doc_id") >= 400)
-    if _LINE_INC_PIN != "off":
-        batch = batch.persist()
-        if _LINE_INC_PIN == "fill":
-            batch = eager_fill(batch)
+    # narrow work, so each re-read re-paid it (a 3x corpus scan in the
+    # profile). Persist + eager-fill computes it once (cold min-of-4 at
+    # sf10p: fill 4.40 vs lazy 4.52 s); the batch is the DAILY
+    # INCREMENT, bounded by posture, so caching it is the scale-safe
+    # side (the corpus slice stays single-pass, uncached).
+    batch = eager_fill(base.filter(F.col("doc_id") >= 400).persist())
 
     def digest_counts(df: DataFrame) -> DataFrame:
         return (

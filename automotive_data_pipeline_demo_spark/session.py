@@ -10,6 +10,12 @@ coalescing), broadcast threshold left to Spark's default so dimension tables
 (region/nation/customer-profile-sized sides) broadcast automatically, shuffle
 partitions sized for the local core count but overridable for cluster runs via
 ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+
+Deployment settings (the only config surface): ``SPARK_GRAFT_CPUS`` (default:
+the cores this process may run on), ``SPARK_GRAFT_MASTER``,
+``SPARK_GRAFT_SHUFFLE_PARTITIONS`` and ``SPARK_GRAFT_DRIVER_MEM`` (default:
+60% of physical memory, capped at 48g — a fixed 48g heap lets the collector
+grow the JVM past physical memory on small hosts until the kernel kills it).
 """
 
 from __future__ import annotations
@@ -17,6 +23,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _host_heap() -> str:
+    """60% of MemTotal, capped at 48g."""
+    with open("/proc/meminfo", encoding="ascii") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{min(kib * 6 // 10 // 1024, 48 * 1024)}m"
 
 
 def get_spark(
@@ -31,7 +44,7 @@ def get_spark(
     timestamps, and the reference stores ``timestamp without time zone``
     (``sql/redshift_table_schemas.sql:106-108``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(
@@ -47,7 +60,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # ANSI off: reference semantics are permissive casts (bad string -> NULL),

@@ -466,7 +466,9 @@ def _prev_round_bench(root: str) -> dict | None:
         byte budget (r15: the grown sf10 smoke forces one section out)
         back in from BENCH_LOCAL.json — valid only when both records
         come from the same code (git_sha match), since BENCH_LOCAL is
-        overwritten by every local bench run."""
+        overwritten by every local bench run. Only ``queries`` is
+        merged: the envelope's own section fields (total_sec, gen_sec)
+        are the round's record and stay."""
         if local is None or not payload.get("git_sha"):
             return payload
         if local.get("git_sha") != payload.get("git_sha"):
@@ -480,7 +482,7 @@ def _prev_round_bench(root: str) -> dict | None:
                 and isinstance(full, dict)
                 and isinstance(full.get("queries"), dict)
             ):
-                payload[sec] = full
+                payload[sec] = {**have, "queries": full["queries"]}
         return payload
 
     for n, path in rounds:

@@ -692,3 +692,30 @@ def test_prev_round_restores_dropped_sections_from_local(tmp_path):
     (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(local))
     got = bench._prev_round_bench(str(tmp_path))
     assert "queries" not in got["sf1"]
+
+
+def test_prev_round_restore_keeps_envelope_section_fields(tmp_path):
+    """Restoring a dropped per-query map merges ONLY ``queries``: the
+    envelope's own section totals (total_sec, gen_sec) are the round's
+    record and must not be replaced by the local run's."""
+    import bench
+
+    sha = "c" * 40
+    envelope = {"parsed": {
+        "metric": "m", "value": 1.0, "queries": {"q": 1.0}, "sf": 0.1,
+        "git_sha": sha,
+        "sf1": {"queries_n": 1, "detail": "BENCH_LOCAL.json",
+                "total_sec": 2.0, "gen_sec": 0.1},
+    }}
+    local = {
+        "metric": "m", "value": 1.0, "queries": {"q": 1.0}, "sf": 0.1,
+        "git_sha": sha,
+        "sf1": {"queries": {"q": 2.5}, "total_sec": 9.0, "gen_sec": 45.0},
+    }
+    (tmp_path / "BENCH_r15.json").write_text(json.dumps(envelope))
+    (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(local))
+    got = bench._prev_round_bench(str(tmp_path))
+    assert got["sf1"]["queries"] == {"q": 2.5}
+    assert got["sf1"]["total_sec"] == 2.0
+    assert got["sf1"]["gen_sec"] == 0.1
+    assert got["sf1"]["queries_n"] == 1

@@ -835,27 +835,19 @@ def test_collapse_auto_gate_single_evaluation(spark):
     assert not getattr(plain, "_graft_persisted", [])
 
 
-def test_star_collapse_single_evaluation_incremental(spark, monkeypatch):
-    """r14: star mode persists the windowed frame. With new_col set,
-    the rep-pair and star-edge branches prune DIFFERENT window columns
+def test_star_collapse_single_evaluation_incremental(spark):
+    """Star mode persists the windowed frame. With new_col set, the
+    rep-pair and star-edge branches prune DIFFERENT window columns
     (__repnew vs __nb/__rep), their exchange subtrees no longer
-    canonicalize equal, and ReuseExchange cannot fire — pre-r14 the
+    canonicalize equal, and ReuseExchange cannot fire — unpinned, the
     whole input (scan -> assignment -> exchange -> window) executed
     once per branch. An accumulator inside a mapInPandas stage under
     the pair call counts input rows evaluated.
 
-    This pins the _SHARE_MARKED="fill" CONTRACT (the serialized eager
-    fill reads exactly n, never 2n), so the knob is forced here: the
-    r15 DEFAULT is "lazy" (cold-JVM A/B — see the knob's comment),
-    under which AQE's racing branch materialization may legally
-    duplicate the fill (bounded by one extra window pass; the cache
-    still serves every later read). The lazy default's cache lifetime
-    is covered by test_star_collapse_shares_marked_cache_incremental.
-    Lifetime: the persist is tagged on the result and released by
-    release_caches, like the auto gate's."""
-    import automotive_data_pipeline_demo_spark.extensions.similarity as _sim
-
-    monkeypatch.setattr(_sim, "_SHARE_MARKED", "fill")
+    The persist is lazy (no serializing count), so AQE's racing branch
+    materialization may legally duplicate the fill at most once:
+    n <= evaluations <= 2n. Lifetime: the persist is tagged on the
+    result and released by release_caches, like the auto gate's."""
     from automotive_data_pipeline_demo_spark.extensions.similarity import (
         embedding_near_dup_pairs,
     )
@@ -881,7 +873,7 @@ def test_star_collapse_single_evaluation_incremental(spark, monkeypatch):
         threshold=0.3, block_col="cell", new_col="is_new", collapse="star",
     )
     out.collect()
-    assert acc.value == len(rows), acc.value
+    assert len(rows) <= acc.value <= 2 * len(rows), acc.value
     held = getattr(out, "_graft_persisted", [])
     assert held and all(f.is_cached for f in held)
     release_caches(out)
