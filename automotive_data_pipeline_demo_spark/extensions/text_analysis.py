@@ -121,18 +121,6 @@ def _stopword_hits(tokens: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens, contains))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``. Let-bound: the
-    token array is evaluated once, not once per reference."""
-
-    def over(toks: Column) -> Column:
-        return _stopword_hits(toks, STOPWORDS[lang]) / F.greatest(
-            F.size(toks), F.lit(1)
-        )
-
-    return bind_once(tokenize(text), over)
-
-
 def language_id(text: Column | str) -> Column:
     """Pick the language whose stopword list matches most tokens.
 

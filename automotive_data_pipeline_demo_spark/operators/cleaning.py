@@ -120,12 +120,3 @@ def redact_pii(
     if ip_token is not None:
         out = F.regexp_replace(out, IPV4_SCAN_RE, ip_token)
     return F.regexp_replace(out, PHONE_SCAN_RE, phone_token)
-
-
-def not_soft_deleted(is_deleted: Column | str, delete_flag: Column | str) -> Column:
-    """P4 soft-delete / GDPR filter (sql/customer_360_views.sql:77-80):
-    (isdeleted IS NULL OR NOT isdeleted) AND (deletedataflag IS NULL OR NOT deletedataflag).
-    """
-    d = F.col(is_deleted) if isinstance(is_deleted, str) else is_deleted
-    g = F.col(delete_flag) if isinstance(delete_flag, str) else delete_flag
-    return (d.isNull() | ~d) & (g.isNull() | ~g)

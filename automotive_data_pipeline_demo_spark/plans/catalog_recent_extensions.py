@@ -764,9 +764,10 @@ def q_x_corpus_drift(spark: SparkSession, sf: str) -> DataFrame:
     # unpinned fold read 27-33% faster here at both bench scales (0.45/0.79
     # s vs 0.62/0.98 at sf0.1/sf10p) and was rejected: its executed plan
     # re-scans the corpus five times (3 ReusedExchange, 5 FileScans —
-    # plans/r15/x_corpus_drift_off_rejected_executed.txt), which only
-    # reads cheap because the two pruned columns of a local parquet file
-    # are page-cached; at 100 TB those are four extra corpus-column scans.
+    # `git show f4e9f77:plans/r15/x_corpus_drift_off_rejected_executed.txt`),
+    # which only reads cheap because the two pruned columns of a local
+    # parquet file are page-cached; at 100 TB those are four extra
+    # corpus-column scans.
     return source_drift_report(docs, "source", "n_chars", bin_width=100)
 
 

@@ -10,7 +10,6 @@ use the JSONL file sink (same event shape, golden-file comparable).
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -64,8 +63,3 @@ def post_events_http(
             poster(endpoint, batch)
 
     json_rows.foreachPartition(send_partition)
-
-
-def parse_event_json(value: str) -> dict:
-    """Helper for tests/goldens."""
-    return json.loads(value)

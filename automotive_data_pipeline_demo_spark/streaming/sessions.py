@@ -98,32 +98,6 @@ def match_analytics_breakdown(
     return hourly.unionByName(daily)
 
 
-def match_analytics_rollup(
-    matches: DataFrame,
-    ts_col: str = "matched_at",
-) -> DataFrame:
-    """A9 two-grain rollup: daily rows (hour_period NULL) + hourly rows —
-    the match_analytics cache, expressed as ROLLUP(date, hour)."""
-    return (
-        matches.select(
-            F.to_date(ts_col).alias("date_period"),
-            F.hour(ts_col).alias("hour_period"),
-            "match_method",
-        )
-        .rollup("date_period", "hour_period")
-        .agg(
-            F.count(F.lit(1)).alias("total_matches"),
-            F.count(F.when(F.col("match_method") == "session_id", 1)).alias(
-                "session_id_matches"
-            ),
-            F.count(F.when(F.col("match_method") == "email_phone", 1)).alias(
-                "email_phone_matches"
-            ),
-        )
-        .filter(F.col("date_period").isNotNull())
-    )
-
-
 def sessionize_capped(
     events: DataFrame,
     user_col: str = "user_id",

@@ -65,57 +65,3 @@ def running_totals_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def running_totals_tws(
-    events: DataFrame,
-    key_col: str = "custkey",
-    amount_col: str = "amount",
-) -> DataFrame:
-    """``running_totals_stream`` on the Spark 4 ``transformWithState`` API —
-    the successor to ``applyInPandasWithState`` with typed state handles,
-    timers, and TTL. Same contract: one update row per touched key per
-    micro-batch; the last row per key equals the batch aggregate.
-
-    Requires the RocksDB state store provider (transformWithState's
-    backing store); callers set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...RocksDBStateStoreProvider`` on the session. The TWS state-server
-    protocol also needs ``google.protobuf`` (a standard Spark-distro
-    dependency; absent from minimal images — the test suite skips there).
-    State remains O(distinct keys), partitioned by the group key.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[amount_col].fillna(0.0).sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_orders": [n],
-                    "lifetime_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=f"{key_col} long, n_orders long, lifetime_value double",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -13,9 +13,10 @@ was lost (`parsed: null`) when 16 verbose flag rows pushed the line to
 env_cleared / A/B detail lives in BENCH_AB.json, and the complete result
 in BENCH_LOCAL.json.
 
-Each query executes fully via the noop sink (no driver collect, no sink
-I/O in the measurement). Session build time is excluded; a warmup query
-primes the JVM/codegen so numbers reflect steady-state plan execution.
+Each query executes fully via the noop sink (:func:`time_noop`; no driver
+collect, no sink I/O in the measurement). Session build time is excluded;
+a warmup query primes the JVM/codegen so numbers reflect steady-state plan
+execution.
 
 sf1 pass: at sf0.1 each query carries ~1 s of fixed JVM/scheduler overhead,
 which swamps real work and makes round-over-round deltas unfalsifiable. When
@@ -104,29 +105,51 @@ def ensure_sf1(spark: SparkSession, src_dir: str) -> str:
     return SF1_DIR
 
 
-def run_suite(spark: SparkSession, sf_dir: str, bench_specs) -> dict[str, float]:
-    # warmup: run the flagship once to JIT codegen paths
-    warm = next(s for s in bench_specs if s.name == "flagship_segments")
-    warm.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+def time_noop(spark: SparkSession, make, n: int = 1) -> float:
+    """Min over ``n`` runs of ``make()`` written to the noop sink: every
+    row is computed, with no driver collect and no sink I/O. This is the
+    one place a catalog or canary frame is executed for timing.
+
+    The cache is dropped before every run so each run times the full
+    query: multi-consumer operators persist intermediates internally
+    (band index, shingle sets, kmeans cells), and CacheManager keys on
+    the canonical plan, so a repeat would otherwise time a warm-cache
+    re-query instead of the operator. ``make`` runs inside the timed
+    region because some builders run eager actions."""
+    best = float("inf")
+    for _ in range(n):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        make().write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def run_suite(
+    spark: SparkSession, sf_dir: str, bench_specs, runs: int = 2
+) -> dict[str, float]:
+    # warmup: run the flagship once to JIT codegen paths (the sf10 probe
+    # corpus has no flagship tables, and its smoke runs without one)
+    for spec in bench_specs:
+        if spec.name == "flagship_segments":
+            time_noop(spark, functools.partial(spec.build, spark, sf_dir))
     # best-of-2 per query: the first execution after a dataset write/generation
     # pays one-off page-cache and codegen costs that can inflate a single-shot
     # number 3-5x; the min of two runs is the steady-state plan cost, which is
     # what round-over-round comparisons need to be falsifiable.
-    timings: dict[str, float] = {}
-    for spec in bench_specs:
-        best = float("inf")
-        for _ in range(2):
-            # drop DataFrame caches so every timed run is the full query:
-            # multi-consumer operators persist intermediates internally
-            # (band index, shingle sets, kmeans cells), and CacheManager
-            # keys on the canonical plan — without this, run 2 would time a
-            # warm-cache re-query instead of the operator.
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[spec.name] = round(best, 3)
-    return timings
+    return {
+        spec.name: round(
+            time_noop(spark, functools.partial(spec.build, spark, sf_dir), runs),
+            3,
+        )
+        for spec in bench_specs
+    }
+
+
+def _canary_sec(spark: SparkSession, q: DataFrame) -> float:
+    """One warm pass that never counts, then min-of-3."""
+    time_noop(spark, lambda: q)
+    return round(time_noop(spark, lambda: q, 3), 3)
 
 
 def host_canary(spark: SparkSession, sf_dir: str) -> float:
@@ -152,13 +175,7 @@ def host_canary(spark: SparkSession, sf_dir: str) -> float:
             F.count(F.lit(1)).alias("n"),
         )
     )
-    best = float("inf")
-    for i in range(4):  # run 0 is the warm pass and never counts
-        t0 = time.perf_counter()
-        q.write.format("noop").mode("overwrite").save()
-        if i > 0:
-            best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+    return _canary_sec(spark, q)
 
 
 def host_canary_mc(spark: SparkSession, sf_dir: str) -> float:
@@ -186,13 +203,7 @@ def host_canary_mc(spark: SparkSession, sf_dir: str) -> float:
             F.count(F.lit(1)).alias("n"),
         )
     )
-    best = float("inf")
-    for i in range(4):  # run 0 is the warm pass and never counts
-        t0 = time.perf_counter()
-        q.write.format("noop").mode("overwrite").save()
-        if i > 0:
-            best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+    return _canary_sec(spark, q)
 
 
 def _mc_usable(now_mc, prev_mc) -> bool:
@@ -525,8 +536,8 @@ def gate_regressions(
     ``host_ratio`` (see :func:`_host_ratio`) normalizes the comparison:
     a flag fires only when ``now`` exceeds ``prev * host_ratio`` by the
     threshold, so a slower container doesn't flag unchanged code. ``pct``
-    defaults to REGRESSION_PCT; the single-run sf10 smoke passes its own
-    wider bar."""
+    defaults to REGRESSION_PCT; the sf10 smoke passes its own wider
+    bar."""
     if not isinstance(prev_queries, dict):
         return []
     bar = host_ratio * (1 + pct / 100)
@@ -541,12 +552,10 @@ def gate_regressions(
     for name in flagged:
         if name not in by_name:
             continue
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        by_name[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        timings[name] = round(min(timings[name], time.perf_counter() - t0), 3)
+        retimed = time_noop(
+            spark, functools.partial(by_name[name].build, spark, sf_dir)
+        )
+        timings[name] = round(min(timings[name], retimed), 3)
     out = []
     for name in flagged:
         prev, now = prev_queries[name], timings[name]
@@ -1224,67 +1233,46 @@ def main() -> None:
 
     root = os.path.dirname(os.path.abspath(__file__))
     dir_of_scope = {f"sf{sf}": sf_dir}
-    want_sf1 = os.environ.get("SPARK_GRAFT_SF1")
-    run_sf1 = want_sf1 == "1" or (want_sf1 != "0" and sf == 0.1)
-    if run_sf1:
+
+    def sf10_dir(spark: SparkSession, _src_dir: str) -> str:
+        sys.path.insert(0, os.path.join(root, "tools"))
+        from sweep_sf10 import DIRS, ensure_probe_dirs
+
+        ensure_probe_dirs(spark)
+        return DIRS["sf10p"][0]
+
+    # scale sections, each on by default only at the driver's sf0.1:
+    # (section, env switch, directory maker, entries, regression %)
+    sections = (
+        ("sf1", "SPARK_GRAFT_SF1", ensure_sf1,
+         [s.name for s in bench_specs], REGRESSION_PCT),
+        ("sf10", "SPARK_GRAFT_SF10", sf10_dir, SF10_SMOKE, SF10_REGRESSION_PCT),
+    )
+    by_name = {s.name: s for s in CATALOG}
+    for section, env, make_dir, names, pct in sections:
+        want = os.environ.get(env)
+        if not (want == "1" or (want != "0" and sf == 0.1)):
+            continue
         try:
+            specs = [by_name[n] for n in names]
             t_gen = time.perf_counter()
-            sf1_dir = ensure_sf1(spark, sf_dir)
+            section_dir = make_dir(spark, sf_dir)
             gen_sec = round(time.perf_counter() - t_gen, 3)
-            t1 = run_suite(spark, sf1_dir, bench_specs)
-            dir_of_scope["sf1"] = sf1_dir
+            t = run_suite(spark, section_dir, specs)
+            dir_of_scope[section] = section_dir
             if prev_comparable:
                 regressions += gate_regressions(
-                    spark, sf1_dir, bench_specs, t1,
-                    prev_comparable.get("sf1", {}).get("queries", {}), "sf1",
-                    host_ratio,
+                    spark, section_dir, specs, t,
+                    prev_comparable.get(section, {}).get("queries", {}),
+                    section, host_ratio, pct=pct,
                 )
-            result["sf1"] = {
-                "queries": t1,
-                "total_sec": round(sum(t1.values()), 3),
+            result[section] = {
+                "queries": t,
+                "total_sec": round(sum(t.values()), 3),
                 "gen_sec": gen_sec,
             }
-        except Exception as exc:  # the primary line must survive an sf1 fault
-            result["sf1"] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
-
-    want_sf10 = os.environ.get("SPARK_GRAFT_SF10")
-    run_sf10 = want_sf10 == "1" or (want_sf10 != "0" and sf == 0.1)
-    if run_sf10:
-        try:
-            sys.path.insert(0, os.path.join(root, "tools"))
-            from sweep_sf10 import DIRS as _SF10_DIRS
-            from sweep_sf10 import ensure_probe_dirs
-
-            t_gen = time.perf_counter()
-            ensure_probe_dirs(spark)
-            gen_sec = round(time.perf_counter() - t_gen, 3)
-            sf10_dir = _SF10_DIRS["sf10p"][0]
-            by_name = {s.name: s for s in CATALOG}
-            t10: dict[str, float] = {}
-            for name in SF10_SMOKE:  # min-of-2 each — see SF10_SMOKE
-                best10 = float("inf")
-                for _ in range(2):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    by_name[name].build(spark, sf10_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    best10 = min(best10, time.perf_counter() - t0)
-                t10[name] = round(best10, 3)
-            dir_of_scope["sf10"] = sf10_dir
-            if prev_comparable:
-                regressions += gate_regressions(
-                    spark, sf10_dir, [by_name[n] for n in SF10_SMOKE], t10,
-                    prev_comparable.get("sf10", {}).get("queries", {}),
-                    "sf10", host_ratio, pct=SF10_REGRESSION_PCT,
-                )
-            result["sf10"] = {
-                "queries": t10,
-                "total_sec": round(sum(t10.values()), 3),
-                "gen_sec": gen_sec,
-            }
-        except Exception as exc:  # the primary line must survive sf10 faults
-            result["sf10"] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+        except Exception as exc:  # the primary line must survive its faults
+            result[section] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
 
     regressions, env_cleared = ab_control(
         root, prev_comparable, regressions, dir_of_scope

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -719,3 +720,131 @@ def test_prev_round_restore_keeps_envelope_section_fields(tmp_path):
     assert got["sf1"]["total_sec"] == 2.0
     assert got["sf1"]["gen_sec"] == 0.1
     assert got["sf1"]["queries_n"] == 1
+
+
+
+# ------------------------------------------------------ the shared timer
+
+
+def _fake_spark(log):
+    return SimpleNamespace(
+        catalog=SimpleNamespace(clearCache=lambda: log.append("clear"))
+    )
+
+
+def _fake_build(monkeypatch, log, costs):
+    """A spec builder whose frames log their write chain; each noop save
+    advances bench's clock by the next cost, so the timer reads exactly
+    ``costs`` in order."""
+    import bench
+
+    clock = [0.0]
+    monkeypatch.setattr(
+        bench, "time", SimpleNamespace(perf_counter=lambda: clock[0])
+    )
+    costs = list(costs)
+
+    class Writer:
+        def format(self, name):
+            log.append(f"format:{name}")
+            return self
+
+        def mode(self, mode):
+            log.append(f"mode:{mode}")
+            return self
+
+        def save(self):
+            clock[0] += costs.pop(0)
+            log.append("save")
+
+    def build(spark, sf_dir):
+        log.append(f"build:{sf_dir}")
+        return SimpleNamespace(write=Writer())
+
+    return build
+
+
+def test_timer_clears_cache_writes_noop_and_takes_min(monkeypatch):
+    """Every timed run of a catalog frame goes cache-clear -> build ->
+    noop write, and the suite records the min of n runs, rounded."""
+    import bench
+
+    log: list = []
+    spec = SimpleNamespace(
+        name="q", build=_fake_build(monkeypatch, log, [3.0, 1.25, 2.0])
+    )
+    got = bench.run_suite(_fake_spark(log), "/d", [spec], runs=3)
+    assert got == {"q": 1.25}
+    one_run = ["clear", "build:/d", "format:noop", "mode:overwrite", "save"]
+    assert log == one_run * 3
+
+
+def test_timer_suite_warms_flagship_untimed(monkeypatch):
+    """The flagship warm-up runs once, uncounted, before the timed runs."""
+    import bench
+
+    log: list = []
+    spec = SimpleNamespace(
+        name="flagship_segments",
+        build=_fake_build(monkeypatch, log, [0.01, 5.0, 4.0]),
+    )
+    assert bench.run_suite(_fake_spark(log), "/d", [spec]) == {
+        "flagship_segments": 4.0
+    }
+    assert log.count("clear") == log.count("save") == 3
+
+
+def test_canary_warm_pass_never_counts(monkeypatch):
+    import bench
+
+    log: list = []
+    frame = _fake_build(monkeypatch, log, [0.01, 5.0, 4.0, 6.0])(None, "/c")
+    assert bench._canary_sec(_fake_spark(log), frame) == 4.0
+    assert log.count("clear") == log.count("save") == 4
+    assert {"format:noop", "mode:overwrite"} <= set(log)
+
+
+def test_gate_retime_keeps_min_of_previous_and_retimed(monkeypatch):
+    """A flagged entry is re-timed once through the shared timer and keeps
+    min(previous, retimed): a slower retime cannot raise the record, a
+    faster one clears the flag."""
+    import bench
+
+    log: list = []
+    spec = SimpleNamespace(
+        name="q", build=_fake_build(monkeypatch, log, [3.0, 0.5])
+    )
+    spark = _fake_spark(log)
+
+    timings = {"q": 2.0}
+    flags = bench.gate_regressions(
+        spark, "/d", [spec], timings, {"q": 1.0}, "sf1"
+    )
+    assert timings == {"q": 2.0}
+    assert [f["now_sec"] for f in flags] == [2.0]
+
+    timings = {"q": 2.0}
+    flags = bench.gate_regressions(
+        spark, "/d", [spec], timings, {"q": 1.0}, "sf1"
+    )
+    assert timings == {"q": 0.5}
+    assert flags == []
+    assert log.count("clear") == log.count("save") == 2
+
+
+def test_tools_import_without_running_main():
+    """Every tool imports cleanly with ``main`` untouched: the sweeps bind
+    bench's timer at import, so renaming a bench function fails here
+    instead of breaking a tool silently."""
+    import glob
+    import importlib.util
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted(glob.glob(os.path.join(root, "tools", "*.py")))
+    assert paths
+    for path in paths:
+        stem = os.path.splitext(os.path.basename(path))[0]
+        spec = importlib.util.spec_from_file_location(f"_tool_{stem}", path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        assert callable(mod.main), stem

@@ -717,71 +717,6 @@ def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
     assert ids == [1, 2, 3], ids
 
 
-def test_running_totals_transform_with_state(spark, tmp_path):
-    """transformWithState (Spark 4 typed-state API) twin of the
-    applyInPandasWithState operator: same contract — after the stream
-    drains, the last update per key equals the batch groupBy.
-
-    The TWS state-server protocol needs google.protobuf, which this
-    container does not ship — skip there; runs on any standard cluster
-    image (protobuf is a pyspark[connect]/Spark-distro staple)."""
-    pytest.importorskip("google.protobuf")
-    from automotive_data_pipeline_demo_spark.streaming.stateful import (
-        running_totals_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        rows = [
-            Row(custkey=1, amount=10.0), Row(custkey=2, amount=5.0),
-            Row(custkey=1, amount=2.5),
-        ]
-        later = [Row(custkey=1, amount=7.5), Row(custkey=3, amount=1.0)]
-        src = tmp_path / "orders_stream_tws"
-        src.mkdir()
-        spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(str(src))
-        spark.createDataFrame(later).coalesce(1).write.mode("append").parquet(str(src))
-
-        stream = (
-            spark.readStream.schema("custkey long, amount double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        updates: list = []
-
-        def sink(batch_df, batch_id):
-            updates.extend(batch_df.collect())
-
-        q = (
-            running_totals_tws(stream)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        final = {}
-        for r in updates:
-            final[r["custkey"]] = (r["n_orders"], r["lifetime_value"])
-        assert final == {1: (3, 20.0), 2: (1, 5.0), 3: (1, 1.0)}
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            # restore the default provider — leaving RocksDB set would leak
-            # into every later test in the shared session
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_streaming_quality_gate(spark, tmp_path):
     """The hashed linear quality classifier is a zero-shuffle narrow map,
     so it composes with Structured Streaming unchanged: stream documents

@@ -1,11 +1,11 @@
 """Full-catalog sf1 timing sweep -> SWEEP_SF1.md.
 
-Runs every catalog entry end-to-end (noop count) against the deterministic
-sf1 mirror (bench.ensure_sf1), twice each: the first (cold) run pays page
-cache and codegen, the second (warm) run after clearCache() is the number
-the table sorts by. Run on a QUIET container (no pytest/window_check/bench
-in flight — contention swings sf1 timings 2.5x) after any plan-affecting
-change:
+Runs every catalog entry end-to-end through bench.py's noop-sink timer
+(bench.time_noop) against the deterministic sf1 mirror (bench.ensure_sf1),
+twice each: the first (cold) run pays page cache and codegen, the second
+(warm) run after clearCache() is the number the table sorts by. Run on a
+QUIET container (no pytest/window_check/bench in flight — contention swings
+sf1 timings 2.5x) after any plan-affecting change:
 
     python tools/sweep_sf1.py            # all entries, rewrites SWEEP_SF1.md
     python tools/sweep_sf1.py name ...   # subset, prints only (no file write)
@@ -13,19 +13,20 @@ change:
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
-import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
 from automotive_data_pipeline_demo_spark.session import get_spark  # noqa: E402
 from automotive_data_pipeline_demo_spark.plans.catalog import CATALOG  # noqa: E402
+from bench import ensure_sf1, time_noop  # noqa: E402
 
 HEADER = """# SWEEP_SF1 — full-catalog warm timings at the synthetic sf1
 
-All {n} catalog entries executed end-to-end (noop count) against the
+All {n} catalog entries executed end-to-end (noop sink) against the
 deterministic sf1 mirror (`bench.py ensure_sf1`: 10 key-shifted copies of
 every fact table, ~6M-row facts / 500k docs), warm = second run after
 `clearCache()`, generated by `tools/sweep_sf1.py` on a quiet container.
@@ -50,39 +51,27 @@ def main() -> int:
     only = set(sys.argv[1:])
     spark = get_spark(app_name="sweep_sf1", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
-    import bench
-
-    sf1 = bench.ensure_sf1(spark, "/root/testdata/sf0.1")
+    sf1 = ensure_sf1(spark, "/root/testdata/sf0.1")
     rows = []
     errors = 0
     for spec in CATALOG:
         if only and spec.name not in only:
             continue
-        times = []
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            try:
-                spec.build(spark, sf1).count()
-            except Exception as exc:  # noqa: BLE001 - record, keep sweeping
-                errors += 1
-                print(f"ERROR {spec.name}: {exc}", flush=True)
-                times = None
-                break
-            times.append(time.time() - t0)
-        if times:
-            cold, warm = times
+        make = functools.partial(spec.build, spark, sf1)
+        try:
+            cold = time_noop(spark, make)
+            warm = time_noop(spark, make)
             if warm > cold * 1.5 and warm > 2.0:
                 # single-shot warm outlier (GC/page-cache swing — the
                 # documented 2x+ variance on dedup entries): one re-time,
                 # take the min of the two warm runs
-                spark.catalog.clearCache()
-                t0 = time.time()
-                spec.build(spark, sf1).count()
-                warm = min(warm, time.time() - t0)
-            rows.append((spec.name, warm, cold))
-            print(f"{spec.name}: warm {warm:.2f}s cold {cold:.2f}s",
-                  flush=True)
+                warm = min(warm, time_noop(spark, make))
+        except Exception as exc:  # noqa: BLE001 - record, keep sweeping
+            errors += 1
+            print(f"ERROR {spec.name}: {exc}", flush=True)
+            continue
+        rows.append((spec.name, warm, cold))
+        print(f"{spec.name}: warm {warm:.2f}s cold {cold:.2f}s", flush=True)
     spark.stop()
     rows.sort(key=lambda r: -r[1])
     warm = sum(r[1] for r in rows)

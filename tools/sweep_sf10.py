@@ -70,6 +70,7 @@ from automotive_data_pipeline_demo_spark.extensions.text_analysis import (  # no
 )
 from automotive_data_pipeline_demo_spark.plans.catalog import CATALOG  # noqa: E402
 from automotive_data_pipeline_demo_spark.session import get_spark  # noqa: E402
+from bench import run_suite  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DIRS = {"sf1p": ("/tmp/spark_graft_sf1p", 10), "sf10p": ("/tmp/spark_graft_sf10p", 100)}
@@ -186,25 +187,6 @@ def ensure_probe_dirs(spark, regen: bool = False) -> None:
             fh.write("ok\n")
 
 
-def time_entries(
-    spark, sf_dir: str, names: list[str] | None = None, runs: int = 2
-) -> dict[str, float]:
-    by_name = {s.name: s for s in CATALOG}
-    out: dict[str, float] = {}
-    for name in names if names is not None else PROBE:
-        spec = by_name[name]
-        best = float("inf")
-        for _ in range(runs):  # min-of-N: run 1 pays page cache/codegen/scratch
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            spec.build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 2)
-    return out
-
-
 HEADER = """# SWEEP_SF10 — sf1 -> sf10 scaling probe (heavy dedup/curation entries)
 
 {intro}
@@ -310,10 +292,12 @@ def main() -> None:
     if os.path.exists(SIDECAR):
         with open(SIDECAR, encoding="utf-8") as fh:
             data = json.load(fh)
+    by_name = {s.name: s for s in CATALOG}
     names = subset if subset is not None else PROBE
     runs = 3 if subset is not None else 2
-    t1 = time_entries(spark, DIRS["sf1p"][0], names, runs)
-    t10 = time_entries(spark, DIRS["sf10p"][0], names, runs)
+    specs = [by_name[n] for n in names]
+    t1 = run_suite(spark, DIRS["sf1p"][0], specs, runs)
+    t10 = run_suite(spark, DIRS["sf10p"][0], specs, runs)
     for name in names:
         data[name] = {"sf1p": t1[name], "sf10p": t10[name]}
 
@@ -331,8 +315,9 @@ def main() -> None:
         ]
         if flagged:
             print(f"re-timing flagged entries min-of-3: {flagged}")
-            r1 = time_entries(spark, DIRS["sf1p"][0], flagged, 3)
-            r10 = time_entries(spark, DIRS["sf10p"][0], flagged, 3)
+            specs = [by_name[n] for n in flagged]
+            r1 = run_suite(spark, DIRS["sf1p"][0], specs, 3)
+            r10 = run_suite(spark, DIRS["sf10p"][0], specs, 3)
             for n in flagged:
                 data[n] = {
                     "sf1p": min(data[n]["sf1p"], r1[n]),
