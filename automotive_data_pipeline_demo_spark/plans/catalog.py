@@ -219,7 +219,7 @@ class QuerySpec:
     name: str
     survey: str                      # SURVEY §2 ids this covers
     build: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None = None        # DuckDB SQL; None -> rows-only check
+    oracle: str                      # DuckDB SQL the result must match
     bench: bool = False              # include in bench.py headline set
     tags: tuple[str, ...] = field(default_factory=tuple)
 
@@ -320,6 +320,5 @@ def queries() -> dict:
 
 
 def oracle_sql() -> dict:
-    """name -> DuckDB SQL for every oracle-checkable spec."""
-    return {spec.name: spec.oracle for spec in _verify_ordered()
-            if spec.oracle is not None}
+    """name -> DuckDB SQL for every spec."""
+    return {spec.name: spec.oracle for spec in _verify_ordered()}

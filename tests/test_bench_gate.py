@@ -1,6 +1,8 @@
-"""The bench regression gate's round-file parsing: the driver stores the
-bench JSON line wrapped in its own envelope under "parsed", and the gate
-must unwrap it (r5 found it silently comparing against nothing)."""
+"""bench_gate.py's round-over-round gate — round-file parsing (the driver
+stores the bench JSON line wrapped in its own envelope under "parsed", and
+the gate must unwrap it: r5 found it silently comparing against nothing),
+host normalization, the compact printed line, the worktree A/B and the
+code-identity check — plus bench.py's shared timer and sf1 mirror."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _prev_round_bench  # noqa: E402
+from bench_gate import _prev_round_bench  # noqa: E402
 
 
 def _write(d, name, payload):
@@ -48,51 +50,6 @@ def test_prev_round_survives_corrupt_file(tmp_path):
     assert _prev_round_bench(d) is None
 
 
-# the r5 driver envelope: "parsed" is null and the bench line exists only
-# as a tail string whose FRONT was cut inside the sf0.1 queries map; the
-# sf1 block and regressions survive intact later in the line
-R05_TAIL = (
-    '.551, "x_dedup_simhash_dedup": 3.255, "x_sim_bruteforce": 0.737, '
-    '"flagship_segments": 0.875, "x_corpus_diff": 0.413}, "sf": 0.1, '
-    '"policy": "min_of_2; min_of_3 on >25%-vs-prev-round regressions", '
-    '"sf1": {"queries": {"x_dedup_pipeline": 14.557, "w1_dedup_latest_agg": '
-    '1.143}, "total_sec": 15.7, "gen_sec": 12.0}, "regressions": '
-    '[{"query": "x_dedup_pipeline", "scope": "sf1", "prev_sec": 7.384, '
-    '"now_sec": 14.557, "delta_pct": 97.1}], "vs_round": 4}'
-)
-
-
-def test_prev_round_recovers_truncated_envelope(tmp_path):
-    """parsed:null + truncated tail (the real BENCH_r05.json shape) must
-    NOT be accepted as an empty-queries payload — the gate recovers the
-    surviving query timings and the intact sf1 block from the tail."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r05.json",
-           {"n": 5, "rc": 0, "cpus": 32, "sf": 0.1, "tail": R05_TAIL,
-            "parsed": None})
-    got = _prev_round_bench(d)
-    assert got is not None and got["_round"] == 5
-    assert got["sf"] == 0.1
-    # partial sf0.1 map: the surviving pairs, no envelope scalars leaked in
-    assert got["queries"] == {
-        "x_dedup_simhash_dedup": 3.255, "x_sim_bruteforce": 0.737,
-        "flagship_segments": 0.875, "x_corpus_diff": 0.413,
-    }
-    # the sf1 block survives whole — this is what the sf1 gate compares
-    assert got["sf1"]["queries"] == {
-        "x_dedup_pipeline": 14.557, "w1_dedup_latest_agg": 1.143,
-    }
-
-
-def test_prev_round_recovers_full_line_in_tail(tmp_path):
-    d = str(tmp_path)
-    line = json.dumps({"metric": "m", "sf": 0.1, "queries": {"q": 1.5}})
-    _write(d, "BENCH_r06.json",
-           {"sf": 0.1, "tail": "noise before\n" + line, "parsed": None})
-    got = _prev_round_bench(d)
-    assert got["_round"] == 6 and got["queries"] == {"q": 1.5}
-
-
 def test_prev_round_prefers_local_record_over_unusable_envelope(tmp_path):
     """When the newest envelope is unrecoverable, BENCH_LOCAL.json (the
     bench run's own durable record) wins over older rounds' envelopes."""
@@ -114,8 +71,8 @@ def test_prev_round_falls_back_to_older_round_without_local(tmp_path):
 
 
 def test_prev_round_never_returns_queryless_payload(tmp_path):
-    """An envelope with sf but no queries (and no recoverable tail) must
-    yield None, not a payload the gate would silently diff against {}."""
+    """An envelope with sf but no queries must yield None, not a payload
+    the gate would silently diff against {}."""
     d = str(tmp_path)
     _write(d, "BENCH_r05.json", {"sf": 0.1, "parsed": None})
     assert _prev_round_bench(d) is None
@@ -129,7 +86,7 @@ def test_host_ratio_symmetric():
     loosens it — the old slower-only clamp meant a slow-box recording
     (r10: canary 1.288) granted every entry ~29% free headroom the next
     round."""
-    from bench import _host_ratio
+    from bench_gate import _host_ratio
 
     import pytest
 
@@ -140,21 +97,6 @@ def test_host_ratio_symmetric():
     assert _host_ratio(None, 0.1) == 1.0           # prev round had none
     assert _host_ratio(0.1, None) == 1.0
     assert _host_ratio(0.1, 0.0) == 1.0
-
-
-def test_pick_host_ratio_prefers_multicore_canary():
-    """r12: the single-thread canary rides boost clocks ~20% off the
-    32-thread suite's regime; when BOTH rounds recorded the multi-core
-    canary, its ratio wins. Transition round (prev has none) and partial
-    measurements fall back to the single-thread ratio."""
-    import pytest
-
-    from bench import _pick_host_ratio
-
-    assert _pick_host_ratio(0.13, 0.10, 2.2, 2.0) == pytest.approx(1.1)
-    assert _pick_host_ratio(0.13, 0.10, 2.2, None) == pytest.approx(1.3)
-    assert _pick_host_ratio(0.13, 0.10, None, 2.0) == pytest.approx(1.3)
-    assert _pick_host_ratio(None, None, None, None) == 1.0
 
 
 def test_gate_tightens_on_faster_host():
@@ -214,7 +156,7 @@ def test_ab_control_clears_flags_old_code_reproduces(tmp_path):
     """The r9 manual worktree control, automated: 15 unrelated entries
     flag at once, the previous round's code re-timed on this box shows
     the same elevation, and every flag moves to env_cleared."""
-    from bench import ab_control
+    from bench_gate import ab_control
 
     prev = {"_round": 9, "git_sha": "deadbeef", "queries": {}}
     flags = [
@@ -238,7 +180,7 @@ def test_ab_control_clears_flags_old_code_reproduces(tmp_path):
 
 
 def test_ab_control_retimes_every_flag_and_splits(tmp_path):
-    from bench import ab_control, split_env_flags
+    from bench_gate import ab_control, split_env_flags
 
     # a SINGLE flag is enough to trigger the A/B since r12 (earlier
     # rounds gated on a storm threshold or an unchanged defining module,
@@ -290,13 +232,13 @@ def test_ab_control_prioritizes_sf10_flags_under_cap(tmp_path):
     cap and the one sf10 flag (x_dedup_semdedup_inc 13.4 -> 37.6 s, a
     cold-corpus first run on a slow box) stood kept WITHOUT an A/B row.
     The budget now orders sf10 flags first."""
-    import bench
-    from bench import ab_control
+    import bench_gate
+    from bench_gate import ab_control
 
     flags = [
         {"query": f"q{i}", "scope": "sf1", "prev_sec": 1.0,
          "now_sec": 1.4, "delta_pct": 40.0}
-        for i in range(bench.AB_MAX_ENTRIES)
+        for i in range(bench_gate.AB_MAX_ENTRIES)
     ] + [
         {"query": "smoke_entry", "scope": "sf10", "prev_sec": 13.4,
          "now_sec": 37.6, "delta_pct": 181.0}
@@ -336,7 +278,7 @@ def test_ab_control_clears_suspects_with_identical_closure(tmp_path):
     module-grain detection saw two helper functions added to their
     1,800-line module. A suspect whose closure DID change stays kept
     with code_unchanged=False."""
-    from bench import ab_control
+    from bench_gate import ab_control
 
     flags = [
         {"query": "q_same", "scope": "sf0.1", "prev_sec": 1.0,
@@ -369,7 +311,7 @@ def test_function_grain_ignores_unrelated_helper_additions():
     helper (or editing another entry's function, or a docstring) does
     NOT change the defining dumps of an untouched entry's closure —
     only an edit to a definition the entry actually reaches does."""
-    from bench import _defining_dumps
+    from bench_gate import _defining_dumps
 
     old_src = (
         "X = 7\n"
@@ -416,7 +358,7 @@ def test_closure_items_function_grain_on_real_catalog():
     function grain and collects exactly the definitions they execute
     (plus session.py whole-file), so a helper addition elsewhere in
     their 1,800-line defining modules cannot flip code_unchanged."""
-    from bench import _closure_items
+    from bench_gate import _closure_items
 
     items = _closure_items("x_text_vocab")
     assert items is not None
@@ -443,7 +385,7 @@ def test_split_env_flags_concurrent_control_is_decisive():
     matches its concurrent old-code time clears even when the old code
     looks FINE vs its recording — the flag was manufactured by the
     normalized bar, not by the code."""
-    from bench import split_env_flags
+    from bench_gate import split_env_flags
 
     flags = [
         # x_dedup_semdedup r11: prev 2.36, now 4.27, old-code-now 3.10 —
@@ -488,7 +430,7 @@ def test_compact_record_stays_under_driver_tail_budget():
     record was lost to 16 verbose rows). Core fields and the full query
     maps must survive compaction; flag rows slim to essentials."""
     from automotive_data_pipeline_demo_spark.plans.catalog import CATALOG
-    from bench import AB_MAX_ENTRIES, EMIT_BYTE_BUDGET, _compact_record
+    from bench_gate import AB_MAX_ENTRIES, EMIT_BYTE_BUDGET, _compact_record
 
     names = [s.name for s in CATALOG if s.bench]
     assert names, "bench set is empty?"
@@ -536,12 +478,12 @@ def test_compact_record_stays_under_driver_tail_budget():
     assert out["queries"] == result["queries"]
     assert out["sf1"]["queries"] == result["sf1"]["queries"]
     assert out["sf10"]["queries"] == result["sf10"]["queries"]
-    assert out["canary_src"] == "mc"
     assert out["git_sha"] == result["git_sha"]
+    assert "canary_sec" not in out and "canary_src" not in out
     # flags: true counts + pointer survive even when rows are dropped
     assert out["regressions_n"] == len(result["regressions"])
     assert out["env_cleared_n"] == len(result["env_cleared"])
-    assert out["detail"] == "BENCH_AB.json"
+    assert out["detail"] == "BENCH_LOCAL.json"
     for row in out["regressions"]:
         assert set(row) <= {"query", "scope", "prev_sec", "now_sec",
                             "code_suspect"}
@@ -557,7 +499,7 @@ def test_compact_record_never_exceeds_budget_on_grown_catalog():
     per-query maps (counts + a BENCH_LOCAL.json pointer stay) and, as a
     last resort, trims the primary queries map with a recorded count —
     the line always fits and always parses."""
-    from bench import EMIT_BYTE_BUDGET, _compact_record
+    from bench_gate import EMIT_BYTE_BUDGET, _compact_record
 
     many = {f"entry_with_a_long_name_{i:04d}": 123.456 for i in range(200)}
     result = {
@@ -582,21 +524,8 @@ def test_compact_record_never_exceeds_budget_on_grown_catalog():
     assert out["queries_dropped_n"] == len(many) - len(out["queries"])
 
 
-def test_mc_usable_decides_canary_src():
-    """canary_src provenance (r13): 'mc' exactly when both rounds carry a
-    usable multi-core canary — the same condition _pick_host_ratio uses,
-    shared via _mc_usable so the record can't drift from the math."""
-    from bench import _mc_usable
-
-    assert _mc_usable(2.2, 2.0)
-    assert not _mc_usable(None, 2.0)
-    assert not _mc_usable(2.2, None)
-    assert not _mc_usable(2.2, 0)
-    assert not _mc_usable("2.2", 2.0)
-
-
 def test_compact_record_keeps_flag_rows_when_they_fit():
-    from bench import _compact_record
+    from bench_gate import _compact_record
 
     result = {
         "metric": "m", "value": 1.0, "unit": "sec",
@@ -611,24 +540,6 @@ def test_compact_record_keeps_flag_rows_when_they_fit():
     assert out["regressions_n"] == 1 and out["env_cleared_n"] == 0
 
 
-def test_recover_from_tail_handles_compact_separators(tmp_path):
-    """The r12 emitter prints with (",", ":") separators — a future
-    truncated envelope must still recover from a compact-separator
-    tail."""
-    d = str(tmp_path)
-    line = (
-        '"x_sim_bruteforce":0.737,"flagship_segments":0.875},"sf":0.1,'
-        '"sf1":{"queries":{"x_dedup_pipeline":14.557},"total_sec":14.6}}'
-    )
-    _write(d, "BENCH_r12.json", {"sf": 0.1, "tail": line, "parsed": None})
-    got = _prev_round_bench(d)
-    assert got is not None and got["_round"] == 12
-    assert got["queries"] == {
-        "x_sim_bruteforce": 0.737, "flagship_segments": 0.875,
-    }
-    assert got["sf1"]["queries"] == {"x_dedup_pipeline": 14.557}
-
-
 def test_compact_record_drops_sf1_map_before_sf10():
     """r15: with the grown sf10 smoke the line cannot always carry both
     sub-section maps. sf1 must be the one that degrades first — sf0.1
@@ -637,7 +548,8 @@ def test_compact_record_drops_sf1_map_before_sf10():
     deltas measure algorithm shape. The REAL r15 record shape (24-entry
     primary + 24-entry sf1 + 9-entry sf10) is exactly the overflow case."""
     from automotive_data_pipeline_demo_spark.plans.catalog import CATALOG
-    from bench import EMIT_BYTE_BUDGET, SF10_SMOKE, _compact_record
+    from bench import SF10_SMOKE
+    from bench_gate import EMIT_BYTE_BUDGET, _compact_record
 
     names = [s.name for s in CATALOG if s.bench]
     result = {
@@ -666,7 +578,7 @@ def test_prev_round_restores_dropped_sections_from_local(tmp_path):
     per-query map for byte budget, the gate merges it back from
     BENCH_LOCAL.json — but ONLY when both records carry the same
     git_sha (BENCH_LOCAL is overwritten by every local run)."""
-    import bench
+    import bench_gate
 
     sha = "a" * 40
     envelope = {"parsed": {
@@ -684,14 +596,14 @@ def test_prev_round_restores_dropped_sections_from_local(tmp_path):
     }
     (tmp_path / "BENCH_r14.json").write_text(json.dumps(envelope))
     (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(local))
-    got = bench._prev_round_bench(str(tmp_path))
+    got = bench_gate._prev_round_bench(str(tmp_path))
     assert got["sf1"]["queries"] == {"q": 2.0}  # restored
     assert got["sf10"]["queries"] == {"s": 3.0}  # untouched
 
     # sha mismatch: the local record is someone else's run — no merge
     local["git_sha"] = "b" * 40
     (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(local))
-    got = bench._prev_round_bench(str(tmp_path))
+    got = bench_gate._prev_round_bench(str(tmp_path))
     assert "queries" not in got["sf1"]
 
 
@@ -699,7 +611,7 @@ def test_prev_round_restore_keeps_envelope_section_fields(tmp_path):
     """Restoring a dropped per-query map merges ONLY ``queries``: the
     envelope's own section totals (total_sec, gen_sec) are the round's
     record and must not be replaced by the local run's."""
-    import bench
+    import bench_gate
 
     sha = "c" * 40
     envelope = {"parsed": {
@@ -715,12 +627,41 @@ def test_prev_round_restore_keeps_envelope_section_fields(tmp_path):
     }
     (tmp_path / "BENCH_r15.json").write_text(json.dumps(envelope))
     (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(local))
-    got = bench._prev_round_bench(str(tmp_path))
+    got = bench_gate._prev_round_bench(str(tmp_path))
     assert got["sf1"]["queries"] == {"q": 2.5}
     assert got["sf1"]["total_sec"] == 2.0
     assert got["sf1"]["gen_sec"] == 0.1
     assert got["sf1"]["queries_n"] == 1
 
+
+def test_ab_control_needs_recorded_git_sha():
+    """The A/B checks out the previous record's own git_sha; a record
+    without one gets no A/B and its flags stay kept, even in a checkout
+    whose history holds that round's BENCH_r09.json."""
+    from bench_gate import ab_control
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    flags = [{"query": "q0", "scope": "sf1", "prev_sec": 1.0,
+              "now_sec": 1.4, "delta_pct": 40.0}]
+    kept, cleared = ab_control(
+        root, {"_round": 9, "queries": {}}, flags, {"sf1": "/sf"},
+        retime=lambda *a: (_ for _ in ()).throw(AssertionError("no A/B")),
+    )
+    assert kept == flags and cleared == []
+
+
+def test_gate_module_never_imports_bench():
+    """The dependency runs one way: bench.py imports bench_gate, and
+    bench_gate imports nothing from bench.py."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, bench_gate; print('bench' in sys.modules)"],
+        cwd=root, capture_output=True, text=True, timeout=60, check=True,
+    )
+    assert out.stdout.strip() == "False"
 
 
 # ------------------------------------------------------ the shared timer
@@ -848,3 +789,27 @@ def test_tools_import_without_running_main():
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         assert callable(mod.main), stem
+
+
+def test_ensure_sf1_rebuilds_for_another_source(spark, tmp_path, monkeypatch):
+    """The sf1 mirror is reused only for the source it was built from: a
+    mirror left by an sf0.01 run must not be timed as the sf0.1 mirror."""
+    import shutil
+
+    import bench
+
+    monkeypatch.setattr(bench, "SF1_DIR", str(tmp_path / "sf1"))
+    monkeypatch.setattr(bench, "_SHIFT_COLS", {"customer": ["c_custkey"]})
+    for name, keys in (("a", [1, 2]), ("b", [5])):
+        spark.createDataFrame([(k,) for k in keys], "c_custkey long").write \
+            .parquet(str(tmp_path / name / "customer.parquet"))
+
+    def mirrored(src: str) -> set[int]:
+        out = bench.ensure_sf1(spark, str(tmp_path / src))
+        rows = spark.read.parquet(f"{out}/customer.parquet").collect()
+        return {r.c_custkey % bench._OFFSET for r in rows}
+
+    assert mirrored("a") == {1, 2}
+    assert mirrored("b") == {5}   # another source: rebuilt
+    shutil.rmtree(tmp_path / "b")
+    assert mirrored("b") == {5}   # same source: reused, not re-read

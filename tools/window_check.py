@@ -52,12 +52,10 @@ def main(argv: list[str]) -> int:
         err = None
         try:
             sdf = qs[name](spark, SF).toPandas()
-            if name in osql:
-                odf = con.execute(osql[name]).fetchdf()
-                problems = compare(sdf, odf)
-                if problems:
-                    err = "; ".join(problems[:3])
-            # entries without an oracle get the driver's weaker rows-only check
+            odf = con.execute(osql[name]).fetchdf()
+            problems = compare(sdf, odf)
+            if problems:
+                err = "; ".join(problems[:3])
         except Exception as ex:  # noqa: BLE001 — report, keep checking the rest
             err = f"{type(ex).__name__}: {ex}"[:300]
         if err:
