@@ -291,9 +291,6 @@ def ivf_topk_stored(
     query_id_col: str = "query_id",
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "c_vec",
-    prune: str = "auto",
-    auto_static_max: int = 1024,
-    n_centroids: int | None = None,
 ) -> DataFrame:
     """ANN search against a STORED cell-assigned corpus — the search half
     of the stored-centroid index posture. ``corpus_cells`` is the
@@ -303,45 +300,16 @@ def ivf_topk_stored(
     corpus is NEVER re-assigned at query time — only the (small) query
     side scores the centroid table, via :func:`ivf_assign`.
 
-    ``prune`` picks how unprobed cells are kept off disk:
-
-    - ``"static"`` (interactive search): the probed cell ids
-      are collected (bounded by |queries| x nprobe — queries are few;
-      the corpus is the 100 TB side) and pushed as a STATIC ``IN``
-      filter before the join, so a corpus store written
-      ``partitionBy(centroid_id)`` prunes unread cells at the SCAN —
-      queries read ~nprobe/n_cells of the corpus from disk, not all of
-      it (pinned by a PartitionFilters plan test). The probe side then
-      broadcasts into the surviving cells.
-    - ``"dpp"`` (large query batches): NO driver collect — the probe
-      frame broadcast-joins the store on the partition column and
-      Spark's dynamic partition pruning turns the broadcast build side
-      into a runtime PartitionFilter on the scan (pinned by a
-      dynamicpruning plan test). Use when |queries| x nprobe is too big
-      to inline as a literal list (a batch-dedup or recommendation
-      sweep probing most cells); identical output by construction —
-      the same join, minus the redundant static filter.
-    - ``"auto"`` (default, r12): callers don't need to know the modes
-      exist — the same auto-guard philosophy as the pair stage's flood
-      collapse. Cheap bounded aggregates bound the static list at
-      min(|queries| x nprobe, |centroids|): the tiny centroid count is
-      taken first and decides alone when it fits ``auto_static_max``
-      (the common interactive case — no query-side count at all); only
-      past it is the query side counted. At or under the budget the
-      plan is ``static``, above it ``dpp``. Both regimes are
-      plan-pinned and output-identical, so the gate only trades
-      driver-collect size against a runtime filter.
-
-      The gate (and the static mode's probe collect) runs EAGERLY at
-      plan-construction time — the same caller advice as the pair
-      stage's stats pass: a caller handing in an expensive derived
-      ``queries`` frame should persist it first or pass an explicit
-      ``prune`` mode, or the gate's query-side count re-evaluates it.
-      Repeated interactive searches against the same store pay no
-      per-call count job: the measured centroid count is memoized on
-      the ``centroids`` frame object, and a caller who already knows it
-      (the index manifest records it) can pass ``n_centroids`` to skip
-      the count entirely.
+    Unprobed cells are pruned before the search: the distinct probed
+    cell ids are collected (at most the centroid table's size, which
+    :func:`ivf_assign` already collects and inlines) and pushed as a
+    static ``IN`` filter ahead of the join, so a corpus store written
+    ``partitionBy(centroid_id)`` prunes unread cells at the SCAN —
+    queries read ~nprobe/n_cells of the corpus from disk, not all of it
+    (pinned by a PartitionFilters plan test). The probe side then
+    broadcasts into the surviving cells. Both collects run eagerly at
+    plan-construction time: a caller handing in an expensive derived
+    ``queries`` frame should persist it first.
 
     Query-side probing scores float cosine against ``centroid_vec_col``
     (pass ``c_sum`` for ``kmeans_centroids`` artifacts — cosine is
@@ -354,32 +322,6 @@ def ivf_topk_stored(
     Output matches :func:`brute_force_topk` / :func:`ivf_topk`:
     (query_id, vec_id, score).
     """
-    if prune not in ("auto", "static", "dpp"):
-        raise ValueError(f"unknown prune: {prune!r}")
-    if prune == "auto":
-        # the distinct probed-cell list static would inline is bounded by
-        # min(|queries| * nprobe, |centroids|). Count the TINY side first:
-        # when the whole centroid table fits the static budget, the list
-        # does too regardless of query count, and the query side is never
-        # counted at all — the common interactive case costs one ~k-row
-        # count, never a corpus or query-batch pass. The count is skipped
-        # outright when the caller supplies n_centroids, and memoized on
-        # the frame object otherwise so repeated searches against the
-        # same store object pay it once (r13).
-        if n_centroids is not None:
-            upper = n_centroids
-        else:
-            upper = getattr(centroids, "_graft_n_centroids", None)
-            if upper is None:
-                upper = centroids.count()
-                centroids._graft_n_centroids = upper
-        if upper > auto_static_max:
-            upper = min(queries.count() * nprobe, upper)
-        prune = "static" if upper <= auto_static_max else "dpp"
-        _log.info(
-            "ivf_topk_stored prune=auto gate: probe_upper=%d -> %s",
-            upper, prune,
-        )
     probes = ivf_assign(
         queries,
         centroids,
@@ -393,14 +335,11 @@ def ivf_topk_stored(
         F.col(vec_col).alias("q_vec"),
         "centroid_id",
     )
-    pruned = corpus_cells
-    if prune == "static":
-        probed = [
-            r["centroid_id"]
-            for r in probes.select("centroid_id").distinct().collect()
-        ]
-        pruned = pruned.filter(F.col(centroid_id_col).isin(probed))
-    pruned = pruned.select(
+    probed = [
+        r["centroid_id"]
+        for r in probes.select("centroid_id").distinct().collect()
+    ]
+    pruned = corpus_cells.filter(F.col(centroid_id_col).isin(probed)).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("c_vec"),
         F.col(centroid_id_col).alias("centroid_id"),
@@ -433,7 +372,6 @@ def embedding_near_dup_pairs(
     new_col: str | None = None,
     collapse: str = "auto",
     collapse_min: int = 64,
-    max_cell_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a_id < b_id, score >= threshold).
 
@@ -483,78 +421,54 @@ def embedding_near_dup_pairs(
     Output contract is unchanged (a_id < b_id, same scores on the pairs
     both modes emit; both strategies honor it identically).
 
-    ``collapse`` / ``max_cell_size`` — the FLOOD and SKEW guards, wired in
-    by default so the 100 TB cost bound holds for callers who don't know
-    the library helpers exist (SURVEY §7.4: a boilerplate flood of f
-    identical vectors otherwise pays f²/2 in-cell pair scores that no
-    cell rule can shrink). Both apply only when ``block_col`` is given.
-    Rows whose ``block_col`` is NULL are dropped up front in EVERY
-    mode/strategy — a NULL block means "assigned to no block", and before
-    r12 the paths disagreed (the equi-join strategy dropped them, the
-    blocked scorer paired them as one bucket, the collapsed path filtered
-    them), so 'exact' was not pair-for-pair identical to the direct plan
-    on NULL-block rows.
+    Rows whose ``block_col`` is NULL are dropped up front in every mode
+    and strategy: a NULL block means "assigned to no block".
 
-    - ``collapse="auto"`` (default) — ONE measured stats pass at
-      (block, vector-identity) grain decides, the way line-dedup's
-      ``broadcast_hot="auto"`` measures before choosing: if the largest
-      identity group has >= ``collapse_min`` members, pairs are scored at
-      REP grain (one representative per identical-vector group, raw
-      double-sequence identity — see :func:`_vector_identity_key`) and
-      then expanded EXACTLY back to the full pair set, so the output is
-      pair-for-pair identical to the direct plan while the flood's
-      scoring cost drops from f²/2 cosines to f²/2 cheap join rows. If
-      additionally ``max_cell_size`` is set and any block exceeds it (at
-      rep grain when collapsing, raw grain otherwise), the frame is
-      subcell-split (:func:`split_oversized_cells`) and pairs block on
-      (block, subcell) — that path trades recall at subcell boundaries
-      exactly like the cell boundary itself and is the one mode whose
-      output is NOT a superset-free match of the direct plan. The split
-      is therefore OPT-IN (``max_cell_size=None`` by default, r12): the
-      default guard is purely the output-exact flood collapse, and a
-      caller must ask for the lossy skew split explicitly. With neither
-      trigger the ORIGINAL single-pass plan runs untouched. The gate
-      decision (measured stats + chosen path) is logged at INFO on this
-      module's logger. The auto path is SINGLE-EVALUATION (r13): the
-      keyed input projection is persisted, the gate job fills the cache,
-      and whichever branch wins reads the cache — an expensive upstream
-      frame (a join over a fresh assignment) is never computed twice.
-      The persist is tagged on the returned frame (``register_caches``);
-      long-lived sessions should ``release_caches(result)`` after the
-      terminal action, while bench/tests already clearCache between
-      queries.
+    ``collapse`` is the FLOOD guard, wired in by default so the 100 TB
+    cost bound holds for callers who don't know it exists (SURVEY §7.4:
+    a boilerplate flood of f identical vectors otherwise pays f²/2
+    in-cell pair scores that no cell rule can shrink). It applies only
+    when ``block_col`` is given. Vectors are grouped per block by raw
+    double-sequence identity (:func:`_vector_identity_key`), and one
+    representative per group (the smallest id) is paired.
+
+    - ``collapse="auto"`` (default) — ONE measured stats pass decides,
+      the way line-dedup's ``broadcast_hot="auto"`` measures before
+      choosing: if the largest identity group has >= ``collapse_min``
+      members, pairs are scored at REP grain and then expanded EXACTLY
+      back to the full pair set, so the output is pair-for-pair
+      identical to the direct plan while the flood's scoring cost drops
+      from f²/2 cosines to f²/2 cheap join rows. Otherwise the direct
+      single-pass plan runs. The gate decision is logged at INFO on this
+      module's logger. The call is SINGLE-EVALUATION: the keyed input
+      projection is persisted, the gate job fills the cache, and
+      whichever branch wins reads it, so an expensive upstream frame (a
+      join over a fresh assignment) is never computed twice. The persist
+      is tagged on the returned frame (``register_caches``); long-lived
+      sessions should ``release_caches(result)`` after the terminal
+      action, while bench/tests already clearCache between queries.
     - ``collapse="star"`` — unconditional collapse for DEDUP consumers:
       emits rep-grain pairs plus one (rep, member) star edge per
-      non-rep member (score 1.0, or NaN for zero/inf-norm groups — the
-      exact value the direct plan's cosine rounds to on an identical
-      pair). The pair SET differs from the direct plan, but its
-      connected components are identical (a group is a clique at
-      cosine 1; a star spans it), and under the greedy smaller-id /
-      accepted-corpus kill rules of the incremental entries every
-      batch vector receives a killing edge iff it does in the direct
-      plan (reps prefer the smallest-id STORED member when ``new_col``
-      is given, and rep-grain pairs enumerate with the group-all-new
-      flag, which is what makes the kill-parity argument go through).
-      With ``new_col``, star edges are restricted to members where the
-      member or its rep is new (r12): a mixed identity group — stored
-      rep, stored members, >= 1 new member — previously emitted
-      stored-stored star edges touching zero new rows, so the
-      incremental contract "every pair touches >= 1 new row" held for
-      rep-grain pairs but not star edges; each new member still gets
-      its rep edge, so kill parity is unchanged.
-      Used by the SemDeDup family and ``streaming_semdedup_ingest``.
-      Measured (r11, sf0.1 corpus + a planted 10,000-copy flood, one
-      cell): direct enumeration 77.6 s / 5.0e7 emitted pairs; star
-      2.4 s / 1.1e4 edges — 32x wall-clock, 4500x fewer edges into the
-      downstream component/kill stage, identical keep set.
-    - ``collapse="exact"`` — unconditional collapse + exact expansion
-      (the flood branch of "auto" without the measured gate).
-    - ``collapse="off"`` — the pre-r11 behavior: no stats pass, no
-      collapse, no split.
+      non-rep member at score 1.0 (zero- and inf-norm groups get no
+      edges: the blocked scorer scores their pairs NULL, see
+      :func:`_identical_pair_score`). The pair SET differs from the
+      direct plan, but its connected components are identical (a group
+      is a clique at cosine 1; a star spans it), and under the greedy
+      smaller-id / accepted-corpus kill rules of the incremental entries
+      every batch vector receives a killing edge iff it does in the
+      direct plan: with ``new_col`` the rep is the smallest-id STORED
+      member, rep-grain pairs enumerate with the group-all-new flag, and
+      star edges are emitted only for NEW members, so every pair still
+      touches >= 1 new row. Used by the SemDeDup family and
+      ``streaming_semdedup_ingest``. Measured (sf0.1 corpus + a planted
+      10,000-copy flood, one cell): direct enumeration 77.6 s / 5.0e7
+      emitted pairs; star 2.4 s / 1.1e4 edges, identical keep set.
+    - ``collapse="off"`` — no stats pass and no collapse: the direct
+      plan, the reference the collapsed modes are tested against.
     """
     if strategy not in ("auto", "join", "blocked"):
         raise ValueError(f"unknown strategy: {strategy!r}")
-    if collapse not in ("off", "auto", "exact", "star"):
+    if collapse not in ("off", "auto", "star"):
         raise ValueError(f"unknown collapse: {collapse!r}")
     if strategy == "auto":
         strategy = "blocked" if block_col else "join"
@@ -569,7 +483,7 @@ def embedding_near_dup_pairs(
         )
     return _near_dup_pairs_collapsed(
         df, threshold, block_col, id_col, vec_col, strategy, chunk_pairs,
-        new_col, collapse, collapse_min, max_cell_size,
+        new_col, collapse, collapse_min,
     )
 
 
@@ -583,7 +497,7 @@ def _enumerate_pairs(
     chunk_pairs: int,
     new_col: str | None,
 ) -> DataFrame:
-    """Strategy dispatch for the raw pair enumeration (no flood/skew
+    """Strategy dispatch for the raw pair enumeration (no flood
     machinery) — the collapsed path re-enters here at rep grain."""
     if strategy == "blocked":
         if not block_col:
@@ -674,15 +588,14 @@ def _near_dup_pairs_collapsed(
     new_col: str | None,
     collapse: str,
     collapse_min: int,
-    max_cell_size: int | None,
 ) -> DataFrame:
-    """Flood/skew-guarded pair enumeration (see
-    :func:`embedding_near_dup_pairs` for the mode contract and the
-    exactness arguments). Plan shape: ONE hash(block) exchange feeds the
-    identity window (groups fold over the __vkey peer range-frame), the
-    blocked scorer consumes that partitioning without re-exchanging, and
-    the star/member branches read the same exchange via ReusedExchange —
-    the input is computed once per job however many branches read it."""
+    """Flood-guarded pair enumeration (see :func:`embedding_near_dup_pairs`
+    for the mode contract and the exactness arguments). Plan shape: ONE
+    hash(block) exchange feeds the identity window (groups fold over the
+    __vkey peer range-frame), the blocked scorer consumes that
+    partitioning without re-exchanging, and the star/member branches read
+    the same exchange via ReusedExchange — the input is computed once per
+    job however many branches read it."""
     base = df.filter(F.col(id_col).isNotNull() & F.col(block_col).isNotNull())
     # Minimal IDENTICAL projection for every consumer branch: the window's
     # exchange subtree must canonicalize equal across the rep-enumeration
@@ -694,7 +607,7 @@ def _near_dup_pairs_collapsed(
         F.col(id_col),
         F.col(vec_col),
         F.col(block_col),
-        _vector_identity_key(id_col, vec_col, quantize=False).alias("__vkey"),
+        _vector_identity_key(id_col, vec_col).alias("__vkey"),
     ]
     if new_col is not None:
         cols.append(
@@ -703,79 +616,42 @@ def _near_dup_pairs_collapsed(
         )
     keyed = base.select(*cols)
     if collapse == "auto":
-        # ONE measured stats pass: flood signal (largest identity group)
-        # and skew signal (largest block, at both raw and rep grain) from
-        # a single map-combinable aggregation chain. The keyed frame is
-        # PERSISTED for the gate's duration and every downstream branch
-        # reads the cache, so the input (often an expensive upstream
-        # join/assignment) is evaluated exactly once per call — the gate
-        # job fills the cache, the caller's action reads it (r13; before
-        # this the stats pass was an acknowledged second full evaluation).
+        # ONE measured stats pass: the largest identity group. The keyed
+        # frame is PERSISTED for the gate's duration and every downstream
+        # branch reads the cache, so the input (often an expensive
+        # upstream join/assignment) is evaluated exactly once per call —
+        # the gate job fills the cache, the caller's action reads it.
         # The persist is tagged onto the returned frame via
         # register_caches: bench/tests clearCache between queries, and a
         # long-lived session calls release_caches(result) after its
         # terminal action.
         keyed = keyed.persist()
-        gstats = keyed.groupBy(block_col, "__vkey").agg(
-            F.count(F.lit(1)).alias("__gn")
-        )
-        row = (
-            gstats.groupBy(block_col)
-            .agg(
-                F.sum("__gn").alias("__bn"),
-                F.count(F.lit(1)).alias("__rn"),
-                F.max("__gn").alias("__gm"),
-            )
-            .agg(
-                F.max("__gm").alias("gm"),
-                F.max("__bn").alias("bn"),
-                F.max("__rn").alias("rn"),
-            )
-            .first()
-        )
-        gm, bn, rn = row["gm"] or 0, row["bn"] or 0, row["rn"] or 0
+        gm = (
+            keyed.groupBy(block_col, "__vkey")
+            .agg(F.count(F.lit(1)).alias("__gn"))
+            .agg(F.max("__gn").alias("gm"))
+            .first()["gm"]
+        ) or 0
         do_collapse = gm >= collapse_min
-        mode = "exact"
-        split_n = rn if do_collapse else bn
-        do_split = max_cell_size is not None and split_n > max_cell_size
         _log.info(
             "embedding_near_dup_pairs collapse=auto gate: max_group=%d "
-            "max_block_raw=%d max_block_rep=%d -> collapse=%s split=%s",
-            gm, bn, rn, do_collapse, do_split,
+            "-> collapse=%s", gm, do_collapse,
         )
-        # the fall-through branches re-root on the cached keyed frame:
-        # __vkey dropped (the enumerators don't read it and the blocked
-        # scorer would ship it through Arrow), the new flag renamed —
-        # _enumerate_pairs' join strategy aliases its b-side norm "__nb"
-        flat = keyed.drop("__vkey").withColumnRenamed("__nb", "__isnew")
-        flag = "__isnew" if new_col is not None else None
-        if not do_collapse and not do_split:
-            # the untouched single-pass plan
+        if not do_collapse:
+            # the untouched single-pass plan, re-rooted on the cached
+            # keyed frame: __vkey dropped (the enumerators don't read it
+            # and the blocked scorer would ship it through Arrow), the new
+            # flag renamed — _enumerate_pairs' join strategy aliases its
+            # b-side norm "__nb"
+            flat = keyed.drop("__vkey").withColumnRenamed("__nb", "__isnew")
             return register_caches(
                 _enumerate_pairs(
                     flat, threshold, block_col, id_col, vec_col, strategy,
-                    chunk_pairs, flag,
+                    chunk_pairs, "__isnew" if new_col is not None else None,
                 ),
                 keyed,
             )
-        if not do_collapse:
-            # skew without flood: subcell-split the cached keyed frame
-            split = split_oversized_cells(
-                flat, max_cell_size=max_cell_size, id_col=id_col,
-                vec_col=vec_col, cell_col=block_col,
-            ).withColumn(
-                "__blk", F.struct(F.col(block_col), F.col("subcell"))
-            )
-            return register_caches(
-                _enumerate_pairs(
-                    split, threshold, "__blk", id_col, vec_col, strategy,
-                    chunk_pairs, flag,
-                ),
-                keyed,
-            )
-    else:
-        mode = collapse
-        do_split = max_cell_size is not None
+    star = collapse == "star"
 
     # Partition the identity window by the BLOCK alone and fold per-group
     # aggregates over the __vkey PEER frame (RANGE CURRENT ROW..CURRENT
@@ -792,7 +668,7 @@ def _near_dup_pairs_collapsed(
     )
     if new_col is not None:
         has_old = F.max(F.when(~F.col("__nb"), 1).otherwise(0)).over(w) == 1
-        if mode == "star":
+        if star:
             # rep prefers the smallest-id STORED member: a mixed group's
             # rep must carry new=False so its star edges kill the group's
             # batch members against the accepted corpus, and rep-grain
@@ -813,9 +689,7 @@ def _near_dup_pairs_collapsed(
     else:
         marked = keyed.withColumn("__rep", F.min(id_col).over(w))
 
-    if collapse == "auto" or (
-        collapse in ("star", "exact") and new_col is not None
-    ):
+    if collapse == "auto" or new_col is not None:
         # The rep-pair and star/member branches are SEPARATE consumers of
         # `marked`. With new_col set their pruned window subtrees differ
         # (the rep branch keeps __repnew, the member branch keeps
@@ -837,14 +711,12 @@ def _near_dup_pairs_collapsed(
         # ReuseExchange already shares everything below the exchange —
         # there the persist only replaces a cheap window recompute with
         # a corpus-scale cache write (measured LOSS: 18.53 s vs 16.57 s
-        # at sf10p), so the unconditional star/exact modes rely on
-        # ReuseExchange and the persist applies only to the new_col form.
+        # at sf10p), so star mode relies on ReuseExchange there.
         #
-        # The AUTO fall-through — the flood gate fired and the call
-        # continues as mode="exact" — also shares the windowed frame.
-        # Here ReuseExchange shares only the exchange below the window:
-        # each of the FIVE exact-expansion readers (reps, mem x2, ga, gb)
-        # re-ran sort+window over the cached keyed frame.
+        # When the auto gate fires, the exact expansion below also shares
+        # the windowed frame. There ReuseExchange shares only the exchange
+        # below the window: unpinned, each of the FIVE expansion readers
+        # (reps, mem x2, ga, gb) re-runs sort+window over the keyed cache.
         marked = marked.persist()
         if collapse == "auto":
             # The gate's stats pass already warmed the keyed cache, so
@@ -857,24 +729,13 @@ def _near_dup_pairs_collapsed(
             keyed.unpersist()
 
     reps = marked.filter(F.col(id_col) == F.col("__rep"))
-    eblk = block_col
-    if do_split:
-        # subcells at REP grain — identity floods are already collapsed,
-        # so this triggers only for genuinely spread hot blocks; the
-        # split op's own measurement makes the unconditional modes
-        # self-deciding without a pre-pass here
-        reps = split_oversized_cells(
-            reps, max_cell_size=max_cell_size, id_col=id_col,
-            vec_col=vec_col, cell_col=block_col,
-        ).withColumn("__blk", F.struct(F.col(block_col), F.col("subcell")))
-        eblk = "__blk"
     rep_pairs = _enumerate_pairs(
-        reps, threshold, eblk, id_col, vec_col, strategy, chunk_pairs,
+        reps, threshold, block_col, id_col, vec_col, strategy, chunk_pairs,
         "__repnew" if new_col is not None else None,
     )
     eq_score = _identical_pair_score(vec_col)
 
-    if mode == "star":
+    if star:
         if new_col is not None:
             # only NEW members: a mixed group (stored rep + stored
             # members + new members) must not emit stored-stored star
@@ -895,10 +756,9 @@ def _near_dup_pairs_collapsed(
             )
             .filter(F.col("score") >= F.lit(threshold))
         )
-        # holds whichever shared frame this call persisted — the auto
-        # gate's keyed cache, or the unconditional modes' marked cache
+        # holds the marked cache when new_col persisted it
         # (register_caches skips unpersisted frames)
-        return register_caches(rep_pairs.unionByName(edges), keyed, marked)
+        return register_caches(rep_pairs.unionByName(edges), marked)
 
     # exact expansion: rep pairs fan back out to member pairs (scores are
     # bit-identical — members ARE the rep vector), plus the in-group
@@ -952,7 +812,7 @@ def _near_dup_pairs_collapsed(
         F.col("__ib").alias("b_id"),
         F.col("__sa").alias("score"),
     ).filter(F.col("score") >= F.lit(threshold))
-    return register_caches(crossx.unionByName(cliq), keyed, marked)
+    return register_caches(crossx.unionByName(cliq), marked)
 
 
 def _near_dup_pairs_blocked(
@@ -1089,7 +949,6 @@ def kmeans_lloyd(
     scale: int = 1_000_000,
     inline_max_k: int = 8,
     route_probe: int | None = None,
-    route_k1: int | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Lloyd's k-means over an embedding corpus (cosine assignment) —
@@ -1124,14 +983,14 @@ def kmeans_lloyd(
     per-cell member sums must stay under ~2^62/(scale·dims), fine through
     billions of rows at 64 dims. Ties break on centroid id ascending.
 
-    ``route_probe`` (with optional ``route_k1``, default ceil(sqrt(k)))
-    switches EVERY assignment pass — training sums and the returned final
-    assignment — to the two-level routed scorer
+    ``route_probe`` switches EVERY assignment pass — training sums and
+    the returned final assignment — to the two-level routed scorer
     (:func:`_assign_numpy_routed`): O(n·sqrt(k)) per pass instead of
     O(n·k), the posture that keeps the linear-pairing cell rule
     k = n/cell_target from turning assignment into the quadratic term.
-    Routed assignment is approximate but deterministic;
-    ``route_probe >= k1`` reproduces the flat result bit-for-bit.
+    Routed assignment is approximate but deterministic; with
+    k1 = ceil(sqrt(k)) representatives, ``route_probe >= k1`` reproduces
+    the flat result bit-for-bit.
 
     Returns the final assignment: (id_col, centroid_id[, keep_cols...]).
     ``keep_cols`` ride through the FINAL assignment pass only (training
@@ -1141,14 +1000,13 @@ def kmeans_lloyd(
     """
     cents, corpus, id_type = _kmeans_train(
         vectors, seeds, n_iter, id_col, vec_col, centroid_id_col,
-        centroid_vec_col, scale, inline_max_k, route_probe, route_k1,
+        centroid_vec_col, scale, inline_max_k, route_probe,
     )
     if keep_cols:
         dims = len(next(iter(cents.values())))
         corpus = _micro_units(vectors, id_col, vec_col, scale, dims, keep_cols)
     return _assign_exact(
-        corpus, cents, id_col, id_type, inline_max_k, route_probe, route_k1,
-        keep_cols,
+        corpus, cents, id_col, id_type, inline_max_k, route_probe, keep_cols,
     ).select(F.col(id_col), "centroid_id", *keep_cols)
 
 
@@ -1163,7 +1021,6 @@ def kmeans_centroids(
     scale: int = 1_000_000,
     inline_max_k: int = 8,
     route_probe: int | None = None,
-    route_k1: int | None = None,
 ) -> DataFrame:
     """Train k-means (same exact-integer contract as :func:`kmeans_lloyd`)
     and return the CENTROIDS — ``(centroid_id, c_sum: array<long>)``, the
@@ -1177,12 +1034,12 @@ def kmeans_centroids(
     the sums are exact integers, a centroid round-trips through parquet
     bit-identically and assignments stay oracle-reproducible.
 
-    ``route_probe``/``route_k1``: train with the routed assignment passes
-    of :func:`kmeans_lloyd` (same semantics).
+    ``route_probe``: train with the routed assignment passes of
+    :func:`kmeans_lloyd` (same semantics).
     """
     cents, _corpus, _ = _kmeans_train(
         vectors, seeds, n_iter, id_col, vec_col, centroid_id_col,
-        centroid_vec_col, scale, inline_max_k, route_probe, route_k1,
+        centroid_vec_col, scale, inline_max_k, route_probe,
     )
     return vectors.sparkSession.createDataFrame(
         [(int(cid), [int(x) for x in cv]) for cid, cv in sorted(cents.items())],
@@ -1200,7 +1057,6 @@ def assign_to_stored_centroids(
     scale: int = 1_000_000,
     inline_max_k: int = 8,
     route_probe: int | None = None,
-    route_k1: int | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Assign vectors to STORED centroids (``kmeans_centroids`` output,
@@ -1212,7 +1068,7 @@ def assign_to_stored_centroids(
     :func:`kmeans_lloyd`, so a batch lands in the same cell the full run
     would have put it in).
 
-    ``route_probe``/``route_k1``: assign through the two-level routed
+    ``route_probe``: assign through the two-level routed
     scorer instead of the flat scan (:func:`_assign_numpy_routed`) —
     O(batch·sqrt(k)) instead of O(batch·k), the daily-ingest cost model
     once the stored index carries SemDeDup-scale cell counts
@@ -1241,8 +1097,7 @@ def assign_to_stored_centroids(
         id_col
     ].dataType.simpleString()
     return _assign_exact(
-        corpus, cents, id_col, id_type, inline_max_k, route_probe, route_k1,
-        keep_cols,
+        corpus, cents, id_col, id_type, inline_max_k, route_probe, keep_cols,
     ).select(F.col(id_col), "centroid_id", *keep_cols)
 
 
@@ -1293,7 +1148,6 @@ def _kmeans_train(
     scale: int,
     inline_max_k: int,
     route_probe: int | None = None,
-    route_k1: int | None = None,
 ) -> tuple[dict[int, list[int]], DataFrame, str]:
     """Shared Lloyd training loop: returns (centroid sums, micro-unit
     corpus frame, id type) after ``n_iter`` iterations."""
@@ -1325,8 +1179,7 @@ def _kmeans_train(
     for _ in range(n_iter):
         sums = (
             _assign_exact(
-                corpus, cents, id_col, id_type, inline_max_k,
-                route_probe, route_k1,
+                corpus, cents, id_col, id_type, inline_max_k, route_probe,
             )
             .select("centroid_id", F.posexplode("__mv").alias("pos", "v"))
             .groupBy("centroid_id", "pos")
@@ -1347,28 +1200,25 @@ def _kmeans_train(
 
 
 def _route_plan(
-    cents: dict[int, list[int]], route_k1: int | None
+    cents: dict[int, list[int]],
 ) -> tuple[list[int], dict[int, list[int]]]:
     """Driver-side coarse routing plan over the (small) centroid table:
-    pick the ``route_k1`` representatives (the k1 smallest centroid ids —
-    deterministic, engine-free), then map every fine centroid to one rep
-    with the SAME exact-integer scoring rule assignment uses
-    (``double(dot)/sqrt(double(norm_rep))``, ties rep-id ascending). A rep
-    always maps to itself, so every rep's member list is non-empty and a
-    probed rep always contributes at least one candidate cell.
+    pick k1 = ceil(sqrt(k)) representatives — the count that balances the
+    rep-scan and probed-block terms of the routed assignment — as the k1
+    smallest centroid ids (deterministic, engine-free), then map every
+    fine centroid to one rep with the SAME exact-integer scoring rule
+    assignment uses (``double(dot)/sqrt(double(norm_rep))``, ties rep-id
+    ascending). A rep always maps to itself, so every rep's member list
+    is non-empty and a probed rep always contributes at least one
+    candidate cell.
 
     All dots/norms here are arbitrary-precision python ints (k × k1 work
     on the driver — centroids are already a driver dict), so there is no
     overflow bound on this step; an oracle replays it with HUGEINT.
-    ``route_k1=None`` defaults to ceil(sqrt(k)) — the count that balances
-    the rep-scan and probed-block terms of the routed assignment.
     Returns (reps ascending, {rep -> member fine cids ascending}).
     """
     cids = sorted(cents)
-    if route_k1 is None:
-        route_k1 = math.ceil(math.sqrt(len(cids)))
-    k1 = max(1, min(route_k1, len(cids)))
-    reps = cids[:k1]
+    reps = cids[:math.ceil(math.sqrt(len(cids)))]
     rep_set = set(reps)
     rep_norm = {r: math.sqrt(float(sum(v * v for v in cents[r]))) for r in reps}
     members: dict[int, list[int]] = {r: [] for r in reps}
@@ -1392,7 +1242,6 @@ def _assign_numpy_routed(
     cents: dict[int, list[int]],
     id_col: str,
     id_type: str,
-    route_k1: int | None,
     route_probe: int,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1407,7 +1256,7 @@ def _assign_numpy_routed(
     the fine centroids whose rep was probed — O(n·(k1 + probe·k/k1)·d),
     ~O(n·sqrt(k)) work per corpus pass. This is APPROXIMATE (a near-best
     cell behind an unprobed rep is missed) but fully deterministic and
-    engine-replayable: probing ``route_probe >= route_k1`` degenerates to
+    engine-replayable: probing ``route_probe >= k1`` degenerates to
     the flat assignment bit-for-bit (pinned by test), and the winner under
     any probe is max-(score, -cid) over the probed candidate set using the
     identical exact-integer arithmetic of the flat paths.
@@ -1432,7 +1281,7 @@ def _assign_numpy_routed(
     import numpy as np
     import pandas as pd
 
-    reps, members = _route_plan(cents, route_k1)
+    reps, members = _route_plan(cents)
     probe = max(1, min(route_probe, len(reps)))
     rmat = np.array([cents[r] for r in reps], dtype=np.int64)  # k1 × d
     rnorms = np.array(
@@ -1508,7 +1357,6 @@ def _assign_exact(
     id_type: str,
     inline_max_k: int,
     route_probe: int | None = None,
-    route_k1: int | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Zero-shuffle exact-integer nearest-centroid assignment:
@@ -1594,7 +1442,7 @@ def _assign_exact(
 
     if route_probe is not None:
         return _assign_numpy_routed(
-            corpus, cents, id_col, id_type, route_k1, route_probe, keep_cols
+            corpus, cents, id_col, id_type, route_probe, keep_cols
         )
     return _assign_inline() if len(cents) <= inline_max_k else _assign_numpy()
 
@@ -1606,190 +1454,10 @@ def _keep_schema(corpus: DataFrame, keep_cols: tuple[str, ...]) -> str:
     return "".join(f", {c} {fields[c]}" for c in keep_cols)
 
 
-def split_oversized_cells(
-    assigned: DataFrame,
-    max_cell_size: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "centroid_id",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Bound in-cell pair cost under SKEWED cell sizes: any cell whose
-    member count exceeds ``max_cell_size`` is re-partitioned into up to
-    ceil(size / max_cell_size) SUBCELLS with one deterministic assignment
-    pass over its own members; cells within the cap keep a single
-    subcell. Pair enumeration downstream blocks on (cell, subcell) — the
-    semdedup analog of the minhash path's ``max_bucket_size`` cap, except
-    no candidates are DROPPED, only partitioned (recall trades at the new
-    subcell boundaries exactly as it does at cell boundaries).
-
-    The cap is GEOMETRIC, not absolute: sub-assignment separates members
-    a hot cell lumped together despite spread-out geometry, but identical
-    and near-identical vectors still co-locate BY DESIGN — identical
-    vectors score identically, so splitting can never lose an exact-dup
-    pair, and symmetrically no subcell rule can shrink a true
-    identical-vector flood (for those, collapse by vector identity
-    upstream with :func:`collapse_identical_vectors` — the embedding
-    analog of the jaccard path's identical-set collapse).
-
-    Mechanics — scales without ever materializing a cell in one task:
-
-    1. ONE aggregation finds per-cell sizes; cells over the cap get
-       k_sub = ceil(size / max_cell_size).
-    2. Sub-seeds are each oversized cell's k_sub smallest-id SCORABLE
-       member vectors — NULL / NULL-or-NaN-element / off-dimension rows
-       are never seed candidates (one rank window over the oversized
-       slice — deterministic, engine-free). The collected sub-seed table
-       is bounded by
-       n / max_cell_size + #oversized_cells rows — the same driver-side
-       footprint class as the main kmeans' centroid dict.
-    3. Assignment is a ZERO-SHUFFLE Arrow-batched map: each row scores
-       ONLY its own cell's sub-seeds (exact integer micro-unit dots,
-       double(dot)/sqrt(double(norm)), min-subcell tiebreak — the
-       identical scoring contract of :func:`kmeans_lloyd`).
-
-    Returns ``assigned`` plus a ``subcell`` long column (0-based rank of
-    the winning sub-seed by ascending seed id; 0 for under-cap cells).
-    Block downstream on ``F.struct(cell_col, "subcell")``.
-    """
-    if max_cell_size < 2:
-        raise ValueError("max_cell_size must be >= 2")
-    sizes = assigned.groupBy(cell_col).agg(F.count("*").alias("__n"))
-    over = sizes.filter(F.col("__n") > max_cell_size).select(
-        cell_col,
-        F.ceil(F.col("__n") / F.lit(max_cell_size)).cast("int").alias("__ks"),
-    )
-    # rank window only over the oversized slice; the under-cap corpus
-    # never shuffles. Seed candidacy is SCORABLE rows only: NULL vectors,
-    # vectors with NULL/NaN elements, and off-dimension (ragged) vectors
-    # are excluded BEFORE the rank window — a NULL seed would break the
-    # driver's int() projection and a ragged seed the matmul. The cell's
-    # seed dimension is its MODAL scorable dimension (ties -> smaller),
-    # so a small-id ragged straggler can never hijack the seed set; the
-    # per-cell dimension table is bounded by the oversized-cell count and
-    # broadcasts.
-    member = assigned.join(F.broadcast(over), cell_col)
-    wcell = Window.partitionBy(cell_col).orderBy(F.col(id_col).asc())
-    rank = F.row_number().over(wcell)
-    unscorable = F.col(vec_col).isNull() | F.exists(
-        F.col(vec_col), lambda x: x.isNull() | F.isnan(x.cast("double"))
-    )
-    scorable = member.filter(~unscorable).withColumn(
-        "__dim", F.size(F.col(vec_col))
-    )
-    wpick = Window.partitionBy(cell_col).orderBy(
-        F.col("__dn").desc(), F.col("__dim").asc()
-    )
-    celldim = (
-        scorable.groupBy(cell_col, "__dim")
-        .agg(F.count(F.lit(1)).alias("__dn"))
-        .withColumn("__dr", F.row_number().over(wpick))
-        .filter(F.col("__dr") == 1)
-        .select(cell_col, F.col("__dim").alias("__cdim"))
-    )
-    cand = scorable.join(F.broadcast(celldim), cell_col).filter(
-        F.col("__dim") == F.col("__cdim")
-    )
-    seed_rows = (
-        cand.withColumn("__r", rank)
-        .filter(F.col("__r") <= F.col("__ks"))
-        .select(
-            cell_col,
-            (F.col("__r") - 1).alias("__sub"),
-            F.transform(
-                F.col(vec_col),
-                lambda x: F.round(x.cast("double") * scale).cast("long"),
-            ).alias("__sv"),
-        )
-        .collect()
-    )
-    if not seed_rows:
-        return assigned.withColumn("subcell", F.lit(0).cast("long"))
-    plan: dict = {}
-    for r in seed_rows:
-        plan.setdefault(r[cell_col], []).append(
-            (int(r["__sub"]), [int(x) for x in r["__sv"]])
-        )
-
-    import numpy as np
-    import pandas as pd
-
-    mats = {}
-    for cell, seeds in plan.items():
-        seeds.sort()  # ascending subcell rank
-        mat = np.array([sv for _, sv in seeds], dtype=np.int64)
-        norms = np.array(
-            [math.sqrt(float(sum(v * v for v in sv))) for _, sv in seeds],
-            dtype=np.float64,
-        )
-        mats[cell] = (mat, norms)
-
-    out_fields = assigned.schema.fields
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-        + ", subcell long"
-    )
-    # micro-units JVM-side: F.round is half-AWAY-from-zero; np.round is
-    # banker's and would diverge from the seed vectors on exact .5
-    # products (same contract as _micro_units / the kmeans numpy path).
-    # Unscorable vectors (NULL / NULL- or NaN-element) project to a whole
-    # NULL __mv so the worker's `v is not None` guard keeps them at
-    # subcell 0 — an element NULL would otherwise surface as a NaN'd
-    # float array and crash the int64 conversion on the worker.
-    with_mv = assigned.withColumn(
-        "__mv",
-        F.when(
-            ~unscorable,
-            F.transform(
-                F.col(vec_col),
-                lambda x: F.round(x.cast("double") * scale).cast("long"),
-            ),
-        ),
-    )
-
-    def split_batches(batches):
-        for pdf in batches:
-            sub = np.zeros(len(pdf), dtype=np.int64)
-            cells = pdf[cell_col].to_numpy()
-            for cell in pd.unique(cells):
-                entry = mats.get(cell)
-                if entry is None:
-                    continue  # under-cap cell: subcell 0
-                mat, norms = entry
-                dims = mat.shape[1]
-                mask = cells == cell
-                rows = pdf.loc[mask, "__mv"]
-                # NULL / ragged vectors can't score — they stay subcell 0
-                # (the same exclusion rule as _micro_units, without
-                # dropping the row from the split output)
-                ok = rows.map(
-                    lambda v: v is not None and len(v) == dims
-                ).to_numpy(dtype=bool)
-                if not ok.any():
-                    continue
-                mv = np.array(rows[ok].tolist(), dtype=np.int64)
-                scores = (mv @ mat.T).astype(np.float64) / norms[None, :]
-                idx = np.where(mask)[0][ok]
-                sub[idx] = scores.argmax(axis=1)  # first max = min rank
-            out = pdf.drop(columns=["__mv"])
-            out["subcell"] = sub
-            yield out
-
-    return with_mv.mapInPandas(split_batches, schema=out_schema)
-
-
-def _vector_identity_key(
-    id_col: str, vec_col: str, quantize: bool, scale: int = 1_000_000
-) -> Column:
-    """Grouping key under which two vectors are interchangeable.
-
-    ``quantize=True`` keys on the integer micro-unit projection — identity
-    under the exact-integer ASSIGNMENT arithmetic (:func:`kmeans_lloyd` /
-    :func:`assign_to_stored_centroids`). ``quantize=False`` keys on the raw
-    double sequence (Spark's shortest-round-trip string repr is injective
-    on doubles), the identity the raw-cosine PAIR scorers compare under —
-    micro-unit identity is too coarse there (two vectors one micro-unit
-    apart can score below a threshold the collapsed rep would clear).
+def _vector_identity_key(id_col: str, vec_col: str) -> Column:
+    """Grouping key under which two vectors are interchangeable for the
+    raw-cosine pair scorers: md5 over the raw double sequence (Spark's
+    shortest-round-trip string repr is injective on doubles).
 
     Any vector that cannot score — whole-column NULL, or containing a NULL
     or NaN ELEMENT — gets a per-row key so it never collapses. The element
@@ -1801,62 +1469,9 @@ def _vector_identity_key(
     bad = v.isNull() | F.exists(
         v, lambda x: x.isNull() | F.isnan(x.cast("double"))
     )
-    if quantize:
-        proj = F.transform(
-            v,
-            lambda x: F.round(x.cast("double") * scale)
-            .cast("long")
-            .cast("string"),
-        )
-    else:
-        proj = F.transform(v, lambda x: x.cast("double").cast("string"))
+    proj = F.transform(v, lambda x: x.cast("double").cast("string"))
     return F.when(~bad, F.md5(F.concat_ws(",", proj))).otherwise(
         F.concat(F.lit("__row__"), F.col(id_col).cast("string"))
-    )
-
-
-def collapse_identical_vectors(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Collapse exact-duplicate vectors to one representative — the
-    embedding analog of the jaccard path's identical-set collapse, and
-    the correct tool for the identical-vector FLOOD that no cell/subcell
-    rule can shrink (see :func:`split_oversized_cells`): a flood of f
-    copies costs f²/2 pair scores enumerated directly, but only f star
-    edges after collapsing.
-
-    Grouping key is md5 over the integer micro-unit projection (the same
-    ``round(x*scale)`` quantization the ASSIGNMENT scorers compare under,
-    so "identical" means identical TO THE ASSIGNMENT ARITHMETIC); rep =
-    the group's min id. NULL / ragged vectors never collapse, and neither
-    does any vector containing a NULL or NaN ELEMENT (each stays its own
-    per-row group — they can't score, so they carry no pair semantics;
-    the element-level routing closes the ``concat_ws``-skips-NULLs hole
-    where ``[1.0, NULL, 2.0]`` would alias ``[1.0, 2.0]``).
-
-    Returns ``(id_col, rep_id, is_rep)`` — one row per input row, one
-    exchange (a min window over the hash key). Exactness contract for
-    pair enumeration: any pair score is a function of the two vectors
-    only, so score(a, b) == score(rep(a), rep(b)); the original pair
-    graph's connected components equal those of rep-grain pairs UNION
-    the star edges (rep_id, id) of multi-member groups — each group is a
-    complete subgraph at cosine 1, and a star spans it. Enumerate
-    expensive pairs on ``is_rep`` rows only, then union the star edges
-    back (pinned by test_collapse_identical_vectors_exact_components).
-    """
-    key = _vector_identity_key(id_col, vec_col, quantize=True, scale=scale)
-    w = Window.partitionBy("__vkey")
-    return (
-        df.select(F.col(id_col), key.alias("__vkey"))
-        .withColumn("rep_id", F.min(id_col).over(w))
-        .select(
-            id_col,
-            "rep_id",
-            (F.col(id_col) == F.col("rep_id")).alias("is_rep"),
-        )
     )
 
 

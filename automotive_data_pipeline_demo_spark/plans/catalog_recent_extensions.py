@@ -1936,12 +1936,9 @@ def q_x_dedup_semdedup_inc(spark: SparkSession, sf: str) -> DataFrame:
     # x_dedup_semdedup) — with new_col the reps prefer the smallest-id
     # STORED member, which keeps the greedy smaller-id kill rule exact
     # (batch ids are the top range here, so rep = global min either way)
-    # max_cell_size=None for the same reason as the full entry: the
-    # fixed-cell rule bounds cells by construction and the split guard's
-    # size measurement would pay an extra assignment pass
     pairs = embedding_near_dup_pairs(
         assigned, threshold=0.30, block_col="centroid_id", new_col="is_new",
-        collapse="star", max_cell_size=None,
+        collapse="star",
     )
     # pairs are (a_id < b_id) touching >= 1 new row; new ids are the top
     # range, so b is ALWAYS the batch side — losers = batch vectors that

@@ -3324,9 +3324,9 @@ def q_x_sim_ivf(spark: SparkSession, sf: str) -> DataFrame:
     centroids, written ``partitionBy(centroid_id)`` (the artifact the
     ingest/refresh machinery maintains at 100 TB), and queries then
     probe their 2 nearest cells WITHOUT ever re-assigning the corpus —
-    the probed cell set lands as a PartitionFilter on the store's scan,
-    so a query batch reads ~nprobe/n_cells of the corpus from disk
-    (plan-pinned in tests). Deterministic (centroids are the first 8
+    the probed cell ids land as a static ``IN`` PartitionFilter on the
+    store's scan, so a query batch reads ~nprobe/n_cells of the corpus
+    from disk (plan-pinned in tests). Deterministic (centroids are the first 8
     vectors, no trained state), and output-identical to the
     re-assign-per-query ``ivf_topk`` formulation the oracle replays —
     the stored round-trip changes WHERE the assignment lives, not what
@@ -3505,15 +3505,11 @@ def q_x_dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     # pinned in tests, plus the 400-copy flood oracle-parity test). The
     # rep/star branches share the (cell, identity) window exchange via
     # ReuseExchange, so the assigned corpus is still computed once per
-    # job. max_cell_size=None: the subcell-split guard's size measurement
-    # would recompute the assignment in an extra job, and the fixed-cell
-    # rule (k = n/128) bounds expected cell size by construction — the
-    # only unbounded-cell mechanism is the identity flood, which the
-    # collapse removes before pairing. The measured split stays on the
-    # generic collapse="auto" path for ad-hoc block keys.
+    # job. The fixed-cell rule (k = n/128) bounds expected cell size by
+    # construction; the only unbounded-cell mechanism is the identity
+    # flood, which the collapse removes before pairing.
     pairs = embedding_near_dup_pairs(
         cells, threshold=0.30, block_col="centroid_id", collapse="star",
-        max_cell_size=None,
     )
     kept = dedup_corpus(emb, pairs, "vec_id")
     return kept.select(

@@ -437,7 +437,6 @@ def streaming_semdedup_ingest(
     checkpoint: str | None = None,
     query_name: str = "streaming_semdedup_ingest",
     route_probe: int | None = None,
-    route_k1: int | None = None,
 ):
     """Streaming twin of the stored-centroid incremental SemDeDup entry
     (``x_dedup_semdedup_inc``) — the third stored-index ingest posture
@@ -520,11 +519,14 @@ def streaming_semdedup_ingest(
         cents = spark.read.parquet(centroids_path)
         # route_probe: per-batch assignment cost drops from O(batch·k) to
         # O(batch·√k) once the stored index carries the fixed-cell rule's
-        # corpus-proportional k (see refresh_centroids)
+        # corpus-proportional k (see refresh_centroids). keep_cols carries
+        # the vector through the zero-shuffle assignment, so nothing joins
+        # back to the batch by id; rows with NULL or off-dimension vectors
+        # are dropped by the assignment and never appended
         assigned = assign_to_stored_centroids(
             batch_df, cents, id_col=id_col, vec_col=vec_col,
-            route_probe=route_probe, route_k1=route_k1,
-        ).join(batch_df.select(id_col, vec_col), id_col)
+            route_probe=route_probe, keep_cols=(vec_col,),
+        )
         if os.path.exists(corpus_path):
             pool = (
                 spark.read.parquet(corpus_path)
@@ -541,17 +543,10 @@ def streaming_semdedup_ingest(
         # smallest-id ACCEPTED member — kill-parity pinned in tests).
         # The identity window rides the scorer's job (ReuseExchange), so
         # the per-batch cost stays one pass over corpus+batch.
-        # max_cell_size=None: the subcell-split guard would re-read the
-        # ACCUMULATED corpus once more per micro-batch for its size
-        # measurement — the wrong trade on a stream; geometric cell skew
-        # is a maintenance-window concern (refresh_centroids retrains
-        # when drift says the cells have outgrown the data), while the
-        # in-batch quadratic risk is the identical-vector flood, which
-        # the collapse kills without an extra pass.
         pairs = embedding_near_dup_pairs(
             pool, threshold=threshold, block_col="centroid_id",
             id_col=id_col, vec_col=vec_col, new_col="__new",
-            collapse="star", max_cell_size=None,
+            collapse="star",
         )
         # pairs are (a_id < b_id) touching >= 1 batch row, but stream ids
         # carry no order vs the stored corpus: a batch vector loses when
@@ -606,7 +601,6 @@ def refresh_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     route_probe: int | None = None,
-    route_k1: int | None = None,
 ) -> dict:
     """Retrain the frozen centroid index on the ACCUMULATED corpus and
     re-assign the stored rows — the maintenance half of the
@@ -652,9 +646,9 @@ def refresh_centroids(
     in-cell pair work stays LINEAR in the corpus; seeds are the ``k``
     smallest-id corpus vectors (deterministic, so a refresh is
     reproducible across engines). At that rule k grows with the corpus,
-    so pass ``route_probe`` (usually 2; optional ``route_k1``, default
-    ceil(sqrt(k))) to run both the retraining passes and the
-    re-assignment through the two-level routed scorer — O(n·√k) per pass
+    so pass ``route_probe`` (usually 2, of ceil(sqrt(k)) representatives)
+    to run both the retraining passes and the re-assignment through the
+    two-level routed scorer — O(n·√k) per pass
     instead of O(n·k), the same knob the full-run entry uses. Routed
     refresh keeps every guarantee here (kept-stays-kept is an exact
     row-count guard, not an assignment property).
@@ -693,7 +687,7 @@ def refresh_centroids(
     )
     new_cents = kmeans_centroids(corpus, seeds, n_iter=n_iter,
                                  id_col=id_col, vec_col=vec_col,
-                                 route_probe=route_probe, route_k1=route_k1)
+                                 route_probe=route_probe)
     # Materialize each artifact into its staging directory and read the
     # guards back FROM the staged files — the staged parquet is the pin.
     # (r9 localCheckpoint(eager=True)'d the reassigned corpus instead,
@@ -704,17 +698,16 @@ def refresh_centroids(
     new_cents.write.parquet(cent_staging)
     new_cents = spark.read.parquet(cent_staging)
     cells_after = new_cents.count()
-    reassigned = (
-        assign_to_stored_centroids(
-            corpus, new_cents, id_col=id_col, vec_col=vec_col,
-            route_probe=route_probe, route_k1=route_k1,
-        )
-        .withColumnRenamed("centroid_id", "__new_cid")
-        .join(corpus.select(F.col(id_col), F.col(vec_col)), id_col)
+    # keep_cols carries the vector through the assignment, so nothing
+    # joins back to the corpus by id; rows the assignment drops (NULL or
+    # off-dimension vectors) trip the row-count guard below
+    reassigned = assign_to_stored_centroids(
+        corpus, new_cents, id_col=id_col, vec_col=vec_col,
+        route_probe=route_probe, keep_cols=(vec_col,),
     )
     corp_staging = f"{corpus_path.rstrip('/')}__refresh_{uuid.uuid4().hex}"
     reassigned.select(
-        F.col(id_col), F.col(vec_col), F.col("__new_cid").alias("centroid_id")
+        F.col(id_col), F.col(vec_col), F.col("centroid_id")
     ).write.parquet(corp_staging)
     staged = spark.read.parquet(corp_staging)
     n_after = staged.count()

@@ -285,7 +285,7 @@ def test_kmeans_routed_full_probe_matches_flat(spark, embeddings, tmp_path):
     routed_full = {
         r["vec_id"]: r["centroid_id"]
         for r in kmeans_lloyd(
-            emb, seeds, n_iter=1, route_probe=12, route_k1=12
+            emb, seeds, n_iter=1, route_probe=12
         ).collect()
     }
     assert routed_full == flat
@@ -301,7 +301,7 @@ def test_kmeans_routed_full_probe_matches_flat(spark, embeddings, tmp_path):
     stored_full = {
         r["vec_id"]: r["centroid_id"]
         for r in assign_to_stored_centroids(
-            emb, stored, route_probe=12, route_k1=12
+            emb, stored, route_probe=12
         ).collect()
     }
     assert stored_full == stored_flat == flat
@@ -348,14 +348,10 @@ def test_ivf_topk_stored_prunes_partitions(spark, embeddings, tmp_path):
     assert sorted(got) == sorted(
         (r["query_id"], r["vec_id"], r["score"]) for r in unpart.collect()
     )
-    # the probe lands in the scan as a partition filter: unprobed cells
-    # are pruned at the source, not post-read. The call above used the
-    # default prune="auto" (r12), whose gate resolves to STATIC here
-    # (probe bound min(3x2, |cents|) <= auto_static_max) — so this also
-    # pins auto's small-batch regime: a LITERAL IN list on the scan
-    # (Spark additionally plants its own dynamicpruning expression on any
-    # broadcast join over the partition column; the literal list is what
-    # distinguishes the static regime).
+    # the probe lands in the scan as a static partition filter: unprobed
+    # cells are pruned at the source, not post-read. The literal IN list
+    # is the assertion (Spark additionally plants its own dynamicpruning
+    # expression on any broadcast join over the partition column).
     import re as _re
 
     plan = stored_part._jdf.queryExecution().executedPlan().toString()
@@ -363,154 +359,6 @@ def test_ivf_topk_stored_prunes_partitions(spark, embeddings, tmp_path):
     assert scan and "centroid_id" in scan[0]
     assert "PartitionFilters: []" not in scan[0]
     assert _re.search(r"centroid_id#\d+ IN \(", scan[0]), scan[0]
-
-    # prune="dpp" (r11): the large-query-batch mode — no driver collect,
-    # the broadcast probe side becomes a RUNTIME partition filter
-    # (dynamic partition pruning) on the partitioned store's scan, and
-    # the result set is identical to the static mode's
-    dpp = ivf_topk_stored(
-        spark.read.parquet(part_path), queries, cents, prune="dpp", **kwargs
-    )
-    assert sorted(got) == sorted(
-        (r["query_id"], r["vec_id"], r["score"]) for r in dpp.collect()
-    )
-    dplan = dpp._jdf.queryExecution().executedPlan().toString()
-    dscan = [ln for ln in dplan.splitlines() if "PartitionFilters" in ln]
-    assert dscan and "dynamicpruning" in dscan[0], dplan
-    assert not _re.search(r"centroid_id#\d+ IN \(", dscan[0]), dscan[0]
-
-    # auto's large-batch regime: over auto_static_max the gate picks dpp
-    # — same pinned plan shape, identical results, no driver collect
-    auto_dpp = ivf_topk_stored(
-        spark.read.parquet(part_path), queries, cents,
-        auto_static_max=0, **kwargs
-    )
-    assert sorted(got) == sorted(
-        (r["query_id"], r["vec_id"], r["score"]) for r in auto_dpp.collect()
-    )
-    aplan = auto_dpp._jdf.queryExecution().executedPlan().toString()
-    ascan = [ln for ln in aplan.splitlines() if "PartitionFilters" in ln]
-    assert ascan and "dynamicpruning" in ascan[0], aplan
-    assert not _re.search(r"centroid_id#\d+ IN \(", ascan[0]), ascan[0]
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown prune"):
-        ivf_topk_stored(store, queries, cents, prune="nope", **kwargs)
-
-
-def test_ivf_prune_auto_gate_count_supplied_or_memoized(spark):
-    """The prune='auto' gate adds ZERO jobs when the caller supplies
-    n_centroids (the index manifest records it), and one count EVER per
-    centroids frame object otherwise — repeated interactive searches
-    against the same store memoize the measured count (r13). Verified
-    with an accumulator under the centroids frame: every call pays
-    exactly one centroids evaluation regardless (ivf_assign inlines the
-    centroid table as literals via a driver collect), so the gate's
-    count job is the delta above that floor."""
-    from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        ivf_topk_stored,
-    )
-
-    store = spark.createDataFrame(
-        [(i, [float(i), 1.0], i % 4) for i in range(12)],
-        "vec_id long, embedding array<double>, centroid_id int",
-    )
-    queries = spark.createDataFrame(
-        [(900, [1.0, 1.0])], "query_id long, embedding array<double>"
-    )
-    cent_rows = [(c, [float(c), 1.0]) for c in range(4)]
-    cent_schema = "centroid_id int, c_vec array<double>"
-
-    def marked_cents():
-        base = spark.createDataFrame(cent_rows, cent_schema)
-        acc = spark.sparkContext.accumulator(0)
-
-        def mark(batches, acc=acc):
-            for b in batches:
-                acc.add(len(b))
-                yield b
-
-        return base.mapInPandas(mark, base.schema), acc
-
-    n = len(cent_rows)
-    # caller-supplied count: the gate runs no count job — the one
-    # centroids evaluation is ivf_assign's inline collect (auto_static_max
-    # 0 forces the dpp regime, so nothing else in the call is eager)
-    cents, acc = marked_cents()
-    out = ivf_topk_stored(
-        store, queries, cents, k=2, auto_static_max=0, n_centroids=n
-    )
-    assert acc.value == n
-    expect = sorted(
-        (r["query_id"], r["vec_id"], r["score"]) for r in out.collect()
-    )
-
-    # no supplied count: the first call pays exactly one extra count job
-    # (gate + inline collect = 2n); a second call against the SAME frame
-    # object reads the memo (inline collect only, 3n total)
-    cents2, acc2 = marked_cents()
-    out1 = ivf_topk_stored(store, queries, cents2, k=2, auto_static_max=0)
-    assert acc2.value == 2 * n
-    ivf_topk_stored(store, queries, cents2, k=2, auto_static_max=0)
-    assert acc2.value == 3 * n
-    assert expect == sorted(
-        (r["query_id"], r["vec_id"], r["score"]) for r in out1.collect()
-    )
-
-
-def test_collapse_identical_vectors_exact_components(spark, embeddings):
-    """The flood collapse is EXACT for dedup: on a corpus with a planted
-    50-copy identical flood, enumerating near-dup pairs on
-    representatives only and unioning the star edges back yields the
-    same kept set as direct pair enumeration over all rows — while the
-    rep-side pair space shrinks from flood² to nothing. NULL vectors
-    never collapse; quantization equality (micro-unit grain) defines
-    'identical', matching the scorers' arithmetic."""
-    from automotive_data_pipeline_demo_spark.extensions.dedup_text import (
-        dedup_corpus,
-    )
-    from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        collapse_identical_vectors,
-        embedding_near_dup_pairs,
-    )
-
-    emb = embeddings.filter(F.col("vec_id") < 150).select("vec_id", "embedding")
-    flood = emb.filter(F.col("vec_id") == 7).select(
-        F.explode(F.sequence(F.lit(0), F.lit(49))).alias("i"), "embedding"
-    ).select((F.col("i") + 1000).alias("vec_id"), "embedding")
-    corpus = emb.unionByName(flood)
-
-    cm = collapse_identical_vectors(corpus)
-    got = {(r["vec_id"], r["rep_id"], r["is_rep"]) for r in cm.collect()}
-    assert len(got) == 200
-    # the flood (and its source vec 7) all map to rep 7
-    assert {(v, 7, v == 7) for v in [7, *range(1000, 1050)]} <= got
-    reps = corpus.join(
-        cm.filter("is_rep").select("vec_id"), "vec_id"
-    )
-    assert reps.count() == 150  # 50 flood copies collapsed into vec 7
-
-    # exactness: rep-grain pairs + star edges ≡ direct pairs, for dedup
-    direct = embedding_near_dup_pairs(corpus, threshold=0.98)
-    kept_direct = {r["vec_id"]
-                   for r in dedup_corpus(corpus, direct, "vec_id").collect()}
-    rep_pairs = embedding_near_dup_pairs(reps, threshold=0.98)
-    stars = cm.filter(~F.col("is_rep")).select(
-        F.col("rep_id").alias("a_id"), F.col("vec_id").alias("b_id")
-    )
-    expanded = rep_pairs.select("a_id", "b_id").unionByName(stars)
-    kept_collapsed = {r["vec_id"]
-                      for r in dedup_corpus(corpus, expanded, "vec_id").collect()}
-    assert kept_collapsed == kept_direct
-
-    # NULL vectors are their own groups
-    withnull = corpus.unionByName(spark.createDataFrame(
-        [(5000, None), (5001, None)], "vec_id long, embedding array<double>"
-    ))
-    nm = {r["vec_id"]: r["rep_id"]
-          for r in collapse_identical_vectors(withnull).collect()}
-    assert nm[5000] == 5000 and nm[5001] == 5001
 
 
 def test_routed_pair_recall_tracks_flat(spark, embeddings):
@@ -569,126 +417,14 @@ def test_routed_pair_recall_tracks_flat(spark, embeddings):
         assert colocation(routed, lvl) >= colocation(flat, lvl) - 0.15
 
 
-def test_split_oversized_cells(spark, embeddings):
-    """The skew cap for in-cell pairing: an oversized cell re-partitions
-    into <= ceil(size/cap) subcells (under-cap cells untouched at
-    subcell 0), exact clones always co-locate, the split is
-    deterministic, and blocking near-dup pairs on (cell, subcell) loses
-    NO planted-duplicate pair while strictly shrinking the pair space."""
-    from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        embedding_near_dup_pairs,
-        split_oversized_cells,
-    )
-
-    emb = embeddings.filter(F.col("vec_id") < 200).select("vec_id", "embedding")
-    # clones of the first 20 vectors — planted exact-dup pairs
-    clones = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
-    )
-    # one pathological hot cell (0) holding everything, plus a small cell
-    assigned = (
-        emb.unionByName(clones)
-        .withColumn(
-            "centroid_id",
-            F.when(F.col("vec_id") % 50 == 49, F.lit(1)).otherwise(F.lit(0))
-            .cast("long"),
-        )
-    )
-    split = split_oversized_cells(assigned, max_cell_size=64)
-    rows = split.collect()
-    assert len(rows) == 220  # no rows dropped or duplicated
-    by_id = {r["vec_id"]: (r["centroid_id"], r["subcell"]) for r in rows}
-    # under-cap cell 1 (4 members) untouched
-    assert {by_id[v] for v in by_id if by_id[v][0] == 1} == {(1, 0)}
-    # hot cell split into <= ceil(216/64)=4 subcells, more than one used
-    hot_subs = {s for c, s in by_id.values() if c == 0}
-    assert hot_subs <= {0, 1, 2, 3} and len(hot_subs) > 1
-    # exact clones co-locate with their source
-    assert all(by_id[v] == by_id[v + 10_000] for v in range(20))
-    # deterministic
-    again = {r["vec_id"]: (r["centroid_id"], r["subcell"])
-             for r in split_oversized_cells(assigned, max_cell_size=64).collect()}
-    assert again == by_id
-
-    # blocking on (cell, subcell): planted pairs all survive, pair space shrinks
-    blocked = split.withColumn(
-        "blk", F.struct(F.col("centroid_id"), F.col("subcell"))
-    )
-    pairs_split = {
-        (r["a_id"], r["b_id"])
-        for r in embedding_near_dup_pairs(
-            blocked, threshold=0.999, block_col="blk"
-        ).collect()
-    }
-    assert {(v, v + 10_000) for v in range(20)} <= pairs_split
-    pairs_cell = {
-        (r["a_id"], r["b_id"])
-        for r in embedding_near_dup_pairs(
-            assigned, threshold=0.999, block_col="centroid_id"
-        ).collect()
-    }
-    assert pairs_split <= pairs_cell
-
-
-def test_split_oversized_cells_null_and_ragged_rows_stay(spark):
-    """Degenerate vectors (NULL / off-dimension) can't be scored but must
-    not be dropped by the split — they keep subcell 0 (the _micro_units
-    exclusion rule, minus the row loss)."""
-    from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        split_oversized_cells,
-    )
-
-    rows = [(i, [1.0 * i, 1.0], 0) for i in range(6)]
-    df = spark.createDataFrame(
-        rows + [(96, None, 0), (97, [1.0], 0)],
-        "vec_id long, embedding array<double>, centroid_id long",
-    )
-    out = split_oversized_cells(df, max_cell_size=4)
-    got = {r["vec_id"]: r["subcell"] for r in out.collect()}
-    assert len(got) == 8
-    assert got[96] == 0 and got[97] == 0
-
-
-def test_split_oversized_cells_degenerate_seed_candidates(spark):
-    """Seed candidacy excludes unscorable rows (r11 hardening): a NULL
-    vector, a NULL-element vector, and a ragged vector occupying the
-    SMALLEST ids of an oversized cell must not become sub-seeds — the
-    min-id rule ranks over scorable same-dimension rows only, so the
-    split neither crashes on the driver's int() projection nor builds an
-    object-dtype seed matrix."""
-    from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        split_oversized_cells,
-    )
-
-    degenerate = [
-        (0, None, 0),
-        (1, [1.0], 0),                   # ragged (cell dim is 2)
-        (2, [1.0, None], 0),             # NULL element
-        (3, [float("nan"), 1.0], 0),     # NaN element
-    ]
-    rows = [(10 + i, [1.0 * i, 1.0], 0) for i in range(8)]
-    df = spark.createDataFrame(
-        degenerate + rows,
-        "vec_id long, embedding array<double>, centroid_id long",
-    )
-    out = split_oversized_cells(df, max_cell_size=4)
-    got = {r["vec_id"]: r["subcell"] for r in out.collect()}
-    assert len(got) == 12            # nothing dropped
-    assert all(got[v] == 0 for v in (0, 1, 2, 3))  # unscorable: subcell 0
-    assert len({got[v] for v in range(10, 18)}) > 1  # split still happened
-    # deterministic replay
-    again = {r["vec_id"]: r["subcell"]
-             for r in split_oversized_cells(df, max_cell_size=4).collect()}
-    assert again == got
-
-
 def test_collapse_identical_vectors_element_null_nan(spark):
-    """Element-level degeneracy routing (r11 ADVICE fix): concat_ws skips
-    NULL array elements, so [1.0, NULL, 2.0] would alias [1.0, 2.0] and
-    a NaN element would alias its cast image — both must take the
-    per-row fallback key and never collapse."""
+    """Element-level degeneracy routing of the pair stage's identity key:
+    concat_ws skips NULL array elements, so [1.0, NULL, 2.0] would alias
+    [1.0, 2.0] and a NaN element would alias its cast image — both must
+    take the per-row fallback key and never collapse, while genuinely
+    identical vectors share one key."""
     from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        collapse_identical_vectors,
+        _vector_identity_key,
     )
 
     df = spark.createDataFrame(
@@ -702,12 +438,16 @@ def test_collapse_identical_vectors_element_null_nan(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    got = {r["vec_id"]: (r["rep_id"], r["is_rep"])
-           for r in collapse_identical_vectors(df).collect()}
-    assert got[1] == (1, True) and got[2] == (2, True)
-    assert got[3] == (3, True)
-    assert got[4] == (4, True) and got[5] == (4, False)
-    assert got[6] == (6, True)
+    key = {
+        r["vec_id"]: r["k"]
+        for r in df.select(
+            "vec_id", _vector_identity_key("vec_id", "embedding").alias("k")
+        ).collect()
+    }
+    for v in (1, 3, 6):
+        assert key[v] == f"__row__{v}"
+    assert key[4] == key[5]
+    assert len({key[v] for v in (1, 2, 3, 4, 6)}) == 5
 
 
 def _near_dup_all_modes(df, **kw):
@@ -722,18 +462,25 @@ def _near_dup_all_modes(df, **kw):
             for r in p.collect()
         )
 
-    return {
+    got = {
         mode: canon(embedding_near_dup_pairs(df, collapse=mode, **kw))
-        for mode in ("off", "auto", "exact", "star")
+        for mode in ("off", "auto", "star")
     }
+    # collapse_min=2 fires the auto gate on any identity group, so the
+    # exact expansion runs whatever the flood size
+    got["auto_min2"] = canon(
+        embedding_near_dup_pairs(df, collapse="auto", collapse_min=2, **kw)
+    )
+    return got
 
 
 def test_near_dup_pairs_collapse_exact_and_star(spark):
     """The r11 flood wiring: with a 70-copy identity flood plus
-    degenerate vectors, collapse='exact' (and the measured 'auto', whose
-    flood gate trips here) returns the pair set BYTE-IDENTICAL to the
-    direct plan, while collapse='star' returns a component-equivalent
-    set whose size is linear in the flood. Degenerate shapes pin the
+    degenerate vectors, the measured collapse='auto' (whose flood gate
+    trips here at the default collapse_min, and at collapse_min=2)
+    returns the pair set BYTE-IDENTICAL to the direct plan, while
+    collapse='star' returns a component-equivalent set whose size is
+    linear in the flood. Degenerate shapes pin the
     blocked scorer's real contract: NULL-element, NaN-element and
     zero-norm vectors pair with nothing (worker NaN crosses Arrow as
     NULL and drops at the threshold filter)."""
@@ -753,7 +500,7 @@ def test_near_dup_pairs_collapse_exact_and_star(spark):
         rows, "vec_id long, label int, embedding array<double>"
     )
     got = _near_dup_all_modes(df, threshold=0.5, block_col="label")
-    assert got["exact"] == got["off"]
+    assert got["auto_min2"] == got["off"]
     assert got["auto"] == got["off"]
     # no degenerate-vector pairs anywhere
     flat_ids = {i for t in got["off"] for i in t[:2]}
@@ -778,6 +525,24 @@ def test_near_dup_pairs_collapse_exact_and_star(spark):
         return {x: find(x) for x in parent}
 
     assert comps(got["star"]) == comps(got["off"])
+
+
+@pytest.mark.parametrize("collapse", ["exact", "nope"])
+def test_near_dup_pairs_rejects_unknown_collapse(spark, collapse):
+    """collapse takes off/auto/star only: the exact expansion runs inside
+    'auto' when its flood gate fires and is not a mode of its own."""
+    from automotive_data_pipeline_demo_spark.extensions.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 0, [1.0, 0.0]), (2, 0, [1.0, 0.0])],
+        "vec_id long, label int, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="unknown collapse"):
+        embedding_near_dup_pairs(
+            df, threshold=0.5, block_col="label", collapse=collapse
+        )
 
 
 def test_collapse_auto_gate_single_evaluation(spark):
@@ -884,8 +649,8 @@ def test_near_dup_pairs_null_block_rows_never_pair(spark):
     """NULL-block rows are dropped up front in EVERY mode and BOTH
     strategies (r12): before, the equi-join strategy dropped them, the
     blocked scorer paired them as one bucket, and the collapsed path
-    filtered them — so collapse='exact' was not pair-for-pair identical
-    to the direct plan on a corpus with NULL blocks."""
+    filtered them — so the collapsed expansion was not pair-for-pair
+    identical to the direct plan on a corpus with NULL blocks."""
     from automotive_data_pipeline_demo_spark.extensions.similarity import (
         embedding_near_dup_pairs,
     )
@@ -904,8 +669,9 @@ def test_near_dup_pairs_null_block_rows_never_pair(spark):
             ids = {i for t in pairs for i in t[:2]}
             assert ids.isdisjoint({10, 11, 12}), (strategy, mode, pairs)
             assert (1, 2, 1.0) in pairs, (strategy, mode)
-        # with NULL blocks in play, exact/auto still match the direct plan
-        assert got["exact"] == got["off"]
+        # with NULL blocks in play, the auto gate's exact expansion
+        # (forced by collapse_min=2) still matches the direct plan
+        assert got["auto_min2"] == got["off"]
         assert got["auto"] == got["off"]
 
 
@@ -952,8 +718,9 @@ def test_near_dup_pairs_star_no_stored_stored_edges(spark):
     ingest's accepted-corpus rule (arbitrary id interleaving) — the
     collapsed edge set kills exactly the batch vectors the direct plan
     kills. Randomized identity-group corpora cover mixed old/new groups,
-    all-new groups, and cross-group near-dups; exact mode stays
-    pair-identical throughout."""
+    all-new groups, and cross-group near-dups; the auto gate's exact
+    expansion (forced by collapse_min=2) stays pair-identical
+    throughout."""
     import random
 
     from automotive_data_pipeline_demo_spark.extensions.similarity import (
@@ -983,8 +750,8 @@ def test_near_dup_pairs_star_no_stored_stored_edges(spark):
                 df, threshold=0.5, block_col="cell", new_col="is_new",
                 collapse=collapse, collapse_min=2).collect()]
 
-        direct, starp, exactp = pp("off"), pp("star"), pp("exact")
-        assert sorted(exactp) == sorted(direct)
+        direct, starp, autop = pp("off"), pp("star"), pp("auto")
+        assert sorted(autop) == sorted(direct)
         new_ids = {r[0] for r in rows if r[1]}
         kill_accepted = lambda ps: {b if b in new_ids else a for a, b in ps}
         assert (new_ids - kill_accepted(direct)
@@ -992,45 +759,6 @@ def test_near_dup_pairs_star_no_stored_stored_edges(spark):
         if ordered:
             assert (new_ids - {b for _, b in direct}
                     == new_ids - {b for _, b in starp})
-
-
-def test_near_dup_pairs_auto_split_on_oversized_block(spark, embeddings):
-    """The measured skew gate (r11): a block over max_cell_size with no
-    identity flood routes through split_oversized_cells automatically —
-    output pairs block on (cell, subcell), a subset of the direct
-    in-cell set that keeps every planted exact-dup pair (clones
-    co-locate by construction of the sub-assignment)."""
-    from automotive_data_pipeline_demo_spark.extensions.similarity import (
-        embedding_near_dup_pairs,
-    )
-
-    emb = embeddings.filter(F.col("vec_id") < 200).select(
-        "vec_id", "embedding"
-    )
-    clones = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
-    )
-    assigned = emb.unionByName(clones).withColumn(
-        "centroid_id",
-        F.when(F.col("vec_id") % 50 == 49, F.lit(1)).otherwise(F.lit(0))
-        .cast("long"),
-    )
-    direct = {
-        (r["a_id"], r["b_id"])
-        for r in embedding_near_dup_pairs(
-            assigned, threshold=0.999, block_col="centroid_id",
-            collapse="off",
-        ).collect()
-    }
-    auto = {
-        (r["a_id"], r["b_id"])
-        for r in embedding_near_dup_pairs(
-            assigned, threshold=0.999, block_col="centroid_id",
-            collapse="auto", max_cell_size=64,
-        ).collect()
-    }
-    assert auto <= direct
-    assert {(v, v + 10_000) for v in range(20)} <= auto
 
 
 def test_kmeans_routed_near_dup_pairs_colocate(spark, embeddings):

@@ -435,13 +435,13 @@ def test_fan_out_gate_scale_adaptive(spark):
 
 def test_flood_collapse_shares_windowed_frame(spark):
     """r15 (VERDICT r14 item 4): when the auto gate's flood branch
-    fires, the call continues as mode="exact" and FIVE expansion
-    readers (reps, mem x2, ga, gb) consume the windowed frame. Pre-r15
-    only the keyed INPUT was cached — each reader re-ran sort+window
-    over it. New contract: the windowed frame itself is persisted and
-    eager-filled, every reader is an InMemoryTableScan, and the keyed
-    pin is released once the fill completes (exactly ONE held cache —
-    cache pressure must not double)."""
+    fires, the call continues into the exact expansion and FIVE
+    expansion readers (reps, mem x2, ga, gb) consume the windowed
+    frame. Pre-r15 only the keyed INPUT was cached — each reader re-ran
+    sort+window over it. New contract: the windowed frame itself is
+    persisted and eager-filled, every reader is an InMemoryTableScan,
+    and the keyed pin is released once the fill completes (exactly ONE
+    held cache — cache pressure must not double)."""
     from automotive_data_pipeline_demo_spark.extensions.similarity import (
         embedding_near_dup_pairs,
     )

@@ -1445,7 +1445,7 @@ def test_refresh_centroids_routed(spark, tmp_path, sf_dir):
               for r in spark.read.parquet(corpus_path).collect()}
 
     routed = refresh_centroids(
-        spark, corpus_path, cents_path, k=12, route_probe=12, route_k1=12
+        spark, corpus_path, cents_path, k=12, route_probe=12
     )
     flat = refresh_centroids(
         spark, str(flat_dir / "corpus"), str(flat_dir / "cents"), k=12
