@@ -23,12 +23,29 @@ converge raises, and the caller falls back to a full rebuild.
 
 Design: gold tables are hive-partitioned by a stable hash bucket of
 ``custno`` (md5-based, so bucket assignment survives restarts and engine
-changes). A refresh recomputes the view DAG over only the closed key
-set's source rows and rewrites exactly the affected bucket partitions
-(delete-then-append: dynamic partition overwrite alone would leave a
-STALE partition when a bucket's recompute became empty). I/O and compute
-are bounded by the touched-bucket fraction, not the corpus; a full
-rebuild is the degenerate case where every bucket is touched.
+changes), one file per bucket directory (the write repartitions by the
+bucket first, so each bucket is written by one task). A refresh
+recomputes the view DAG over only the closed key set's source rows and
+rewrites exactly the affected bucket partitions (delete-then-append:
+dynamic partition overwrite alone would leave a STALE partition when a
+bucket's recompute became empty). I/O and compute are bounded by the
+touched-bucket fraction, not the corpus.
+
+A full rebuild is the degenerate case where every bucket is touched, and
+``refresh_gold`` routes it to ``full_build_gold`` outright: when the
+delta's own buckets already cover every bucket it skips the closure (the
+closure only adds buckets), and when the closed key set does, it skips
+the slicing (with every bucket touched the sliced inputs ARE the full
+inputs). The result is the same; the closure jobs and the deal-complete
+slicing of the whole lake are not paid.
+
+The refresh's customer slice is widened the same way as its sales slice:
+``validated_vehicle_sales`` keeps only sales rows of marketable customers
+BEFORE its deal dedup, so a touched deal's row belonging to a customer in
+an unrefreshed bucket must still see that customer's profile, or an older
+in-bucket row would be re-elected and the deal would sit in two buckets.
+Every customer on a touched deal is therefore read; the output bucket
+filter drops their rows.
 """
 
 from __future__ import annotations
@@ -59,8 +76,12 @@ def key_bucket(custno: Column | str, n_buckets: int = DEFAULT_BUCKETS) -> Column
 
 
 def _write_gold(df: DataFrame, table: str, n_buckets: int, mode: str) -> None:
+    # one task per bucket, so one file per bucket directory: without the
+    # exchange each write task leaves its own file in every bucket it sees
+    # (a full build over a merged multi-file lake wrote 4 files per bucket)
     (
         df.withColumn(_KB, key_bucket("custno", n_buckets))
+        .repartition(_KB)
         .write.mode(mode)
         .partitionBy(_KB)
         .parquet(table)
@@ -85,14 +106,13 @@ def close_over_deals(
     changed_keys: DataFrame,
     vehicle_sales: DataFrame,
     max_iters: int = 5,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Fixpoint closure of a custno delta over the customer<->deal graph.
 
-    Returns (keys, deals): every custno whose gold slice the delta can
-    affect, and every dealno whose surviving row must be recomputed.
-    Each iteration is two distributed semi-joins on small key frames;
-    raises RuntimeError if ``max_iters`` iterations don't converge
-    (caller should full-rebuild instead).
+    Returns every custno whose gold slice the delta can affect. Each
+    iteration is two distributed semi-joins on small key frames; raises
+    RuntimeError if ``max_iters`` iterations don't converge (caller should
+    full-rebuild instead).
     """
     key_col = changed_keys.columns[0]
     keys = changed_keys.select(F.col(key_col).alias("custno")).distinct()
@@ -113,12 +133,18 @@ def close_over_deals(
             .distinct()
         )
         if keys2.exceptAll(keys).isEmpty():
-            return keys2, deals
+            return keys2
         keys = keys2
     raise RuntimeError(
         f"customer<->deal closure did not converge in {max_iters} iterations;"
         " fall back to full_build_gold"
     )
+
+
+def _buckets_of(keys: DataFrame, n_buckets: int) -> list[int]:
+    """The sorted bucket ids of a one-column key frame (one small job)."""
+    b = key_bucket(F.col(keys.columns[0]), n_buckets).alias("b")
+    return sorted(r["b"] for r in keys.select(b).distinct().collect())
 
 
 def refresh_gold(
@@ -135,18 +161,27 @@ def refresh_gold(
     values (any name; the first column is used). Returns the refreshed
     bucket ids (of the CLOSED key set — a deal shared across customers
     widens the delta to everyone on the deal).
+
+    When the delta's buckets, or the closed key set's, are every bucket,
+    the refresh is ``full_build_gold`` and returns every bucket id.
+    Otherwise it recomputes the views over the touched buckets' customers
+    plus every customer on a touched deal, and over every row of a
+    touched deal, and rewrites only the touched bucket directories, one
+    file each. Raises RuntimeError if the closure does not converge.
     """
-    keys, deals = close_over_deals(changed_keys, vehicle_sales)
-    buckets = sorted(
-        r["b"]
-        for r in keys.select(key_bucket("custno", n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
+    every = list(range(n_buckets))
+    buckets = _buckets_of(changed_keys, n_buckets)
+    if buckets != every:
+        keys = close_over_deals(changed_keys, vehicle_sales)
+        buckets = _buckets_of(keys, n_buckets)
+    if buckets == every:
+        full_build_gold(
+            spark, gold_dir, customer_master, vehicle_sales, as_of, n_buckets
+        )
+        return every
     if not buckets:
         return []
     in_buckets = key_bucket(F.col("custno"), n_buckets).isin(buckets)
-    cm = customer_master.filter(in_buckets)
     # Deal-COMPLETE input: every row of any deal that has at least one row
     # in a refreshed bucket (the deal-grain dedup needs the deal's full
     # row competition — a bucket-only row filter would let a cross-bucket
@@ -163,10 +198,17 @@ def refresh_gold(
     vs = vehicle_sales.join(touched_deals, "dealno", "left_semi").unionByName(
         vehicle_sales.filter(in_buckets & F.col("dealno").isNull())
     )
+    # plus every customer on those deals: validated_vehicle_sales needs
+    # their profiles for its deal competition (see the module docstring)
+    cm = customer_master.filter(in_buckets).unionByName(
+        customer_master.filter(~in_buckets).join(
+            vs.select("custno"), "custno", "left_semi"
+        )
+    )
     views = build_view_dag(cm, vs, as_of)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     for name, df in views.items():
-        df = df.filter(key_bucket(F.col("custno"), n_buckets).isin(buckets))
+        df = df.filter(in_buckets)
         # Delete the affected partition dirs FIRST, then append: dynamic
         # partition overwrite only replaces partitions PRESENT in the new
         # data, so a bucket whose recompute became empty (every customer
@@ -178,7 +220,7 @@ def refresh_gold(
         for b in buckets:
             fs.delete(jvm_path(f"{table}/{_KB}={b}"), True)
         _write_gold(df, table, n_buckets, "append")
-    return list(buckets)
+    return buckets
 
 
 def detect_changed_keys(

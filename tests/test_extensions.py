@@ -712,6 +712,9 @@ def test_near_dup_pairs_star_no_stored_stored_edges(spark):
         assert a in new_ids or b in new_ids, (a, b)
     # every new member of the mixed group keeps its rep edge
     assert (1, 100) in pairs and (1, 101) in pairs
+
+
+def test_near_dup_pairs_star_kill_parity_randomized(spark):
     """The star mode's incremental contract (r11): under BOTH downstream
     kill rules — the batch entry's greedy smaller-id rule (valid in its
     id-ordered regime, stored ids below batch ids) and the streaming
