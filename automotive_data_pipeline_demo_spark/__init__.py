@@ -18,19 +18,7 @@ Tungsten choose the physical plan; Python UDFs appear only where built-in
 operators cannot express the semantics (Arrow-vectorized pandas UDFs).
 """
 
-from automotive_data_pipeline_demo_spark.session import get_spark, stop_spark
+from automotive_data_pipeline_demo_spark.session import get_spark
 
-
-def load_catalog():
-    """The full operator catalog: {name: builder(spark, sf_dir) -> DataFrame}.
-
-    Imported lazily so ``import automotive_data_pipeline_demo_spark`` stays
-    cheap (the catalog module pulls in every operator family).
-    """
-    from automotive_data_pipeline_demo_spark.plans import catalog
-
-    return catalog.queries()
-
-
-__all__ = ["get_spark", "stop_spark", "load_catalog"]
+__all__ = ["get_spark"]
 __version__ = "0.1.0"

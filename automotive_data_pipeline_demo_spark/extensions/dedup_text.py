@@ -176,9 +176,8 @@ def minhash_signature_columns(
     shingle row carries the k salted hashes as columns, so the shuffle
     moves the shingle rows once (with map-side partial mins), not k×
     exploded copies — at 100 TB that is a k-fold cut in shuffle bytes.
-    Band keys, packed signature arrays, and the long (id, hash_idx,
-    min_hash) shape are all NARROW projections of this frame — deriving
-    them here (rather than re-aggregating the exploded long shape, the
+    Band keys and packed signature arrays are NARROW projections of
+    this frame — deriving them here (rather than re-aggregating the exploded long shape, the
     pre-r7 build_band_index shape) removes one full signature-grain
     exchange from every banding/estimate consumer.
     """
@@ -201,38 +200,6 @@ def minhash_signature_columns(
             for i in range(num_hashes)
         ]
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash signature per document: (id, hash_idx, min_hash) — the
-    long shape, a narrow explode of :func:`minhash_signature_columns`.
-
-    Each of the ``num_hashes`` "permutations" is a salted md5 — min over the
-    shingle set approximates the Jaccard-similarity-preserving min-permutation.
-    """
-    mins = minhash_signature_columns(
-        df, id_col, text_col, num_hashes, shingle_n, shingles=shingles
-    )
-    return mins.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("hash_idx"), F.col(f"__h{i}").alias("min_hash")
-                    )
-                    for i in range(num_hashes)
-                ]
-            )
-        ).alias("__sig"),
-    ).select("id", "__sig.hash_idx", "__sig.min_hash")
 
 
 def ngram_contamination(
@@ -802,7 +769,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     All ``bits`` majority votes run in ONE groupBy(id): each token row
     carries its bit-votes with map-side partial sums, so the shuffle moves
     token rows once — not bits× exploded copies (the same k-fold shuffle
-    cut as minhash_signatures). The ``bits`` sums are built as a single
+    cut as minhash_signature_columns). The ``bits`` sums are built as a single
     ``array(sum(...), ...)`` SQL string and the fingerprint reassembly as
     one zip-with-masks fold: one JVM parse each, instead of 2×``bits``
     Python-side Column constructions whose py4j roundtrips cost ~1 s of

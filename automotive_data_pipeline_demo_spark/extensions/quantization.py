@@ -66,13 +66,6 @@ def _inorm2(a: Column) -> Column:
     )
 
 
-def quantized_cosine(a: Column, b: Column) -> Column:
-    """Cosine over int8 codes: integer sums, one sqrt+division at the end."""
-    return _idot(a, b).cast("double") / (
-        F.sqrt(_inorm2(a).cast("double")) * F.sqrt(_inorm2(b).cast("double"))
-    )
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,

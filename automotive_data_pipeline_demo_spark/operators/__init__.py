@@ -16,7 +16,6 @@ from automotive_data_pipeline_demo_spark.operators.cleaning import (
     clean_phone,
     clean_numeric_value,
     clean_string_value,
-    is_marketable_contact,
     is_valid_email,
 )
 from automotive_data_pipeline_demo_spark.operators.classify import case_ladder, ilike_classify
@@ -47,7 +46,6 @@ __all__ = [
     "clean_phone",
     "clean_numeric_value",
     "clean_string_value",
-    "is_marketable_contact",
     "is_valid_email",
     "case_ladder",
     "ilike_classify",

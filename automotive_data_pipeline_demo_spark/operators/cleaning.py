@@ -57,20 +57,6 @@ def is_valid_email(col: Column | str) -> Column:
     )
 
 
-def has_valid_phone(col: Column | str, min_digits: int = 10) -> Column:
-    """Phone has >= min_digits digits after stripping punctuation (P5)."""
-    p = clean_phone(col)
-    return p.isNotNull() & (F.length(p) >= min_digits)
-
-
-def is_marketable_contact(
-    name_col: Column | str, email_col: Column | str, phone_col: Column | str
-) -> Column:
-    """Name non-empty AND (valid email OR >=10-digit phone) (P5)."""
-    n = clean_string_value(name_col)
-    return n.isNotNull() & (is_valid_email(email_col) | has_valid_phone(phone_col))
-
-
 # Scan (non-anchored) forms of the reference's email/phone shapes
 # (sql/customer_360_views.sql:93-107) for free-text PII redaction. Kept to
 # the Java-regex/RE2 common subset so the DuckDB oracle runs them verbatim.

@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automotive_data_pipeline_demo_spark.plans.views import build_view_dag
+from automotive_data_pipeline_demo_spark.sources.merge import delete_path
 
 #: default bucket count for gold partitioning — at 100 TB size so one
 #: bucket's source slice fits a comfortable recompute (e.g. 4096).
@@ -206,7 +207,6 @@ def refresh_gold(
         )
     )
     views = build_view_dag(cm, vs, as_of)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     for name, df in views.items():
         df = df.filter(in_buckets)
         # Delete the affected partition dirs FIRST, then append: dynamic
@@ -214,11 +214,8 @@ def refresh_gold(
         # data, so a bucket whose recompute became empty (every customer
         # dropped out of the view) would otherwise keep its stale rows.
         table = f"{gold_dir}/{name}"
-        fs = jvm_path(table).getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
         for b in buckets:
-            fs.delete(jvm_path(f"{table}/{_KB}={b}"), True)
+            delete_path(spark, f"{table}/{_KB}={b}")
         _write_gold(df, table, n_buckets, "append")
     return buckets
 

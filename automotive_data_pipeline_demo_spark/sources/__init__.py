@@ -4,7 +4,6 @@ from automotive_data_pipeline_demo_spark.sources.readers import (
     read_csv_typed,
     read_lake,
     read_lake_evolved,
-    read_table,
     write_partitioned_lake,
 )
 from automotive_data_pipeline_demo_spark.sources.compact import (
@@ -26,7 +25,6 @@ __all__ = [
     "read_csv_typed",
     "read_lake",
     "read_lake_evolved",
-    "read_table",
     "write_partitioned_lake",
     "compact_parquet",
     "plan_compaction",

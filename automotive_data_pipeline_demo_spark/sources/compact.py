@@ -21,7 +21,10 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from automotive_data_pipeline_demo_spark.sources.merge import _hadoop_fs
+from automotive_data_pipeline_demo_spark.sources.merge import (
+    _hadoop_fs,
+    swap_directory,
+)
 
 
 def plan_compaction(
@@ -49,19 +52,17 @@ def compact_parquet(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Rewrite the parquet directory at ``path`` into
-    ``ceil(total_bytes/target_bytes)`` files via staging + atomic rename.
+    ``ceil(total_bytes/target_bytes)`` files via staging + directory swap.
 
     The read plan's lineage points only at the original files and the
     staging write completes before any original file is touched, so a
     failure never leaves a MIX of old and new data (same two-stage
-    protocol as merge_upsert). The swap itself is two renames, not one
-    atomic op: a process crash between them leaves ``path`` absent with
-    the old table intact in the ``__trash_*`` sibling — recovery is
-    renaming that directory back. Concurrent readers can also observe the
-    missing-path window mid-swap; run compaction when the table is not
-    being read (or on a storage layer with atomic directory swap). Skips
-    the rewrite entirely when the file count is already at or below
-    target. For hive-partitioned lakes, call per partition directory —
+    protocol as merge_upsert). The swap is ``sources/merge.py``'s
+    :func:`swap_directory`: two renames with rollback, whose crash and
+    concurrent-reader contract means compaction runs while the table is
+    not being read. Skips the rewrite entirely when the file count is
+    already at or below target. For hive-partitioned lakes, call per
+    partition directory —
     compaction then prunes to the partitions that actually accreted small
     files.
     """
@@ -75,19 +76,3 @@ def compact_parquet(
     swap_directory(spark, path, staging)
     return {**plan, "rewritten": True}
 
-
-def swap_directory(spark: SparkSession, path: str, staging: str) -> None:
-    """Atomically-ish replace ``path`` with ``staging`` (two renames with
-    rollback — the shared swap step of every staged rewrite here; see
-    :func:`compact_parquet` for the crash/concurrent-reader contract)."""
-    fs, target_jpath = _hadoop_fs(spark, path)
-    _, staging_jpath = _hadoop_fs(spark, staging)
-    trash_jpath = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}__trash_{uuid.uuid4().hex}"
-    )
-    if not fs.rename(target_jpath, trash_jpath):
-        raise IOError(f"could not move {path} aside for compaction swap")
-    if not fs.rename(staging_jpath, target_jpath):
-        fs.rename(trash_jpath, target_jpath)  # roll back
-        raise IOError(f"could not swap compacted files into {path}")
-    fs.delete(trash_jpath, True)

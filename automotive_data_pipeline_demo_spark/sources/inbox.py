@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from automotive_data_pipeline_demo_spark.sources.merge import _hadoop_fs, path_exists
+
 
 def default_decryptor(payload: bytes) -> bytes:
     """Placeholder for a gnupg-backed decryptor (not in this container)."""
@@ -56,14 +58,12 @@ def list_inbox(spark: SparkSession, root: str, suffix: str = ".csv.gpg") -> Data
     read. ``table`` is the parent directory name (the reference's
     per-table inbox layout).
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     rows = []
-    if not fs.exists(hpath):  # an empty/never-provisioned inbox is not an error
+    if not path_exists(spark, root):  # a never-provisioned inbox is not an error
         return spark.createDataFrame(
             rows, schema="table string, path string, mtime_ms long, size long"
         )
+    fs, hpath = _hadoop_fs(spark, root)
     it = fs.listFiles(hpath, True)
     while it.hasNext():
         st = it.next()

@@ -29,10 +29,57 @@ from automotive_data_pipeline_demo_spark.operators.dedup import dedup_latest
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` — the one place the engine reaches
+    lake storage other than through a DataFrame read or write, so local,
+    HDFS and object-store (``s3a://``) paths take the same code."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop-FS existence probe: one metadata RPC, no Spark job.
+
+    A local ``os.path`` probe is False for every URI path (``file://``,
+    ``hdfs://``, ``s3a://``), and a try/read/except probe logs a Java stack
+    trace on every cold start and mistakes a failing read of an existing
+    table for an absent one.
+    """
+    fs, jpath = _hadoop_fs(spark, path)
+    return bool(fs.exists(jpath))
+
+
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is a no-op."""
+    fs, jpath = _hadoop_fs(spark, path)
+    fs.delete(jpath, True)
+
+
+def swap_directory(spark: SparkSession, path: str, staging: str) -> None:
+    """Replace directory ``path`` with ``staging``: the swap step of every
+    staged rewrite here (the unpartitioned MERGE commit, compaction, index
+    and centroid maintenance).
+
+    Two renames with rollback, not one atomic op. If the second rename
+    fails, the original table is renamed back and ``IOError`` is raised. A
+    process crash between the renames leaves ``path`` absent with the old
+    table intact in the ``__trash_*`` sibling; recovery is renaming that
+    directory back. Concurrent readers can also observe the missing-path
+    window mid-swap, so run a rewrite when the table is not being read (or
+    on a storage layer with atomic directory swap).
+    """
+    fs, target_jpath = _hadoop_fs(spark, path)
+    _, staging_jpath = _hadoop_fs(spark, staging)
+    trash_jpath = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{path.rstrip('/')}__trash_{uuid.uuid4().hex}"
+    )
+    if not fs.rename(target_jpath, trash_jpath):
+        raise IOError(f"could not move {path} aside for swap")
+    if not fs.rename(staging_jpath, target_jpath):
+        fs.rename(trash_jpath, target_jpath)  # roll back
+        raise IOError(f"could not swap {staging} into {path}")
+    fs.delete(trash_jpath, True)
 
 
 def merge_upsert_frames(
@@ -69,11 +116,14 @@ def merge_upsert(
     path first, so no write ever depends on lineage over the files it is
     replacing (a cache() barrier is not a guarantee — cached blocks are
     evictable and executor loss triggers recompute against deleted files).
-    Unpartitioned targets are then swapped in with an atomic filesystem
-    rename; partitioned targets are re-read FROM STAGING and dynamically
+    Unpartitioned targets are then swapped in by :func:`swap_directory`;
+    partitioned targets are re-read FROM STAGING and dynamically
     overwritten, so the final write's lineage points at staging files only.
     This mirrors the reference's stage-to-temp-table-then-swap protocol
-    (``scripts/glue_vehicle_sales_etl.py:289-392``).
+    (``scripts/glue_vehicle_sales_etl.py:289-392``). If the commit fails,
+    the staging copy is kept and an ``IOError`` names it. The target is
+    probed with :func:`path_exists`, so a failing read of an existing
+    target raises instead of being taken for an absent table.
 
     INVARIANT (partitioned merges): partition-column values must be
     immutable per merge key. Touched partitions are derived from ``updates``;
@@ -87,22 +137,17 @@ def merge_upsert(
     else:
         updates = updates.dropDuplicates(list(keys))
 
-    try:
-        # Pin the read schema (target schema == updates schema is the merge
-        # contract): partition directory names must not be type-re-inferred —
-        # a string partition value like '07' would silently round-trip as
-        # the int 7 under partitionColumnTypeInference.
-        target = spark.read.schema(updates.schema).parquet(target_path)
-        exists = True
-    except Exception:
-        exists = False
-
-    if not exists:
+    if not path_exists(spark, target_path):
         writer = updates.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(target_path)
         return
+    # Pin the read schema (target schema == updates schema is the merge
+    # contract): partition directory names must not be type-re-inferred —
+    # a string partition value like '07' would silently round-trip as the
+    # int 7 under partitionColumnTypeInference.
+    target = spark.read.schema(updates.schema).parquet(target_path)
 
     if partition_cols:
         # prune target read to touched partitions, bound write amplification
@@ -134,8 +179,6 @@ def merge_upsert(
         stage_writer = stage_writer.partitionBy(*partition_cols)
     stage_writer.parquet(staging_path)
 
-    fs, target_jpath = _hadoop_fs(spark, target_path)
-    _, staging_jpath = _hadoop_fs(spark, staging_path)
     try:
         if partition_cols:
             # Stage 2 (partitioned): re-read from staging — fresh lineage over
@@ -152,18 +195,9 @@ def merge_upsert(
                 .parquet(target_path)
             )
         else:
-            # Stage 2 (unpartitioned): atomic swap. Rename is atomic on
-            # HDFS/local FS; the target is never in a half-written state.
-            trash_jpath = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{target_path.rstrip('/')}__trash_{uuid.uuid4().hex}"
-            )
-            if not fs.rename(target_jpath, trash_jpath):
-                raise IOError(f"could not move {target_path} aside for swap")
-            if not fs.rename(staging_jpath, target_jpath):
-                # roll back: put the original table back
-                fs.rename(trash_jpath, target_jpath)
-                raise IOError(f"could not swap staging into {target_path}")
-            fs.delete(trash_jpath, True)
+            # Stage 2 (unpartitioned): swap staging in; a failed second
+            # rename rolls the original table back.
+            swap_directory(spark, target_path, staging_path)
     except BaseException as exc:
         # Stage 2 failed mid-commit: the staging copy may be the only intact
         # version of touched partitions, so KEEP it and point at it — the
@@ -175,7 +209,7 @@ def merge_upsert(
         ) from exc
     # Success only: staging is no longer needed (for the unpartitioned swap
     # it was already renamed away, making this a no-op).
-    fs.delete(staging_jpath, True)
+    delete_path(spark, staging_path)
 
 
 def scd2_merge(

@@ -163,7 +163,3 @@ def read_lake_evolved(
         reader = reader.option("basePath", base_path)
     return reader.parquet(path)
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

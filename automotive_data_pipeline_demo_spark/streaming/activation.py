@@ -24,6 +24,7 @@ from automotive_data_pipeline_demo_spark.functions.scalars import (
     mint_user_id,
     track_event_struct,
 )
+from automotive_data_pipeline_demo_spark.sources.merge import path_exists
 
 
 def build_track_events(
@@ -73,7 +74,10 @@ def emit_new_events(
     Returns the events to deliver this run; call :func:`mark_processed`
     after a successful sink flush. Re-running without marking re-emits the
     same set (at-least-once); marking makes the next run emit zero (the
-    exactly-once test).
+    exactly-once test). The state table is probed with
+    ``sources/merge.py``'s :func:`path_exists` (Hadoop FS), so local,
+    HDFS and object-store state paths behave alike; no state yet means
+    every event is new.
     """
     windowed = sales
     if start_date:
@@ -81,23 +85,12 @@ def emit_new_events(
     if end_date:
         windowed = windowed.filter(F.col(date_col) <= F.lit(end_date))
     events = build_track_events(windowed, date_col=date_col)
-    if _state_exists(spark, state_path):
+    if path_exists(spark, state_path):
         processed = spark.read.parquet(state_path).select("message_id")
         events = events.join(processed, "message_id", "left_anti")
-    # no state yet -> everything is new
     if limit:
         events = events.orderBy(F.col("deal_number").asc()).limit(limit)
     return events
-
-
-def _state_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence probe (works for local, HDFS, and object stores;
-    avoids the try/read/except pattern that logs a Java stack trace on every
-    cold start)."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
 
 
 def mark_processed(spark: SparkSession, events: DataFrame, state_path: str) -> None:

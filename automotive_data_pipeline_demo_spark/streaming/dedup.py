@@ -8,13 +8,14 @@ verified against only the band-hit corpus docs, and the surviving novel
 docs are appended to the corpus lake AND to the index (so later batches
 dedup against earlier ones too). Exactly-once per doc under retries comes
 from the same anti-join-before-append discipline the activation sink uses
-(streaming/activation.py): a re-delivered batch's docs already in the
-corpus are dropped by the index/id check before writing.
+(streaming/activation.py). All three ingest twins run it through one
+guard, :func:`_unseen_rows`: a re-delivered batch's docs already in the
+stored corpus are dropped by id before writing. Its storage probe is
+``sources/merge.py``'s :func:`path_exists`, so local, HDFS and
+object-store corpus paths take the same branch.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,6 +27,12 @@ from automotive_data_pipeline_demo_spark.extensions.dedup_text import (
     near_dup_against_index,
 )
 from automotive_data_pipeline_demo_spark.functions.caching import release_caches
+from automotive_data_pipeline_demo_spark.sources.compact import plan_compaction
+from automotive_data_pipeline_demo_spark.sources.merge import (
+    delete_path,
+    path_exists,
+    swap_directory,
+)
 
 
 def _dedupe_batch_ids(batch_df: DataFrame, id_col: str) -> DataFrame:
@@ -54,6 +61,32 @@ def _dedupe_batch_ids(batch_df: DataFrame, id_col: str) -> DataFrame:
             F.col(c) if c == id_col else F.col(f"__p.{c}").alias(c)
             for c in batch_df.columns
         ]
+    )
+
+
+def _unseen_rows(
+    batch_df: DataFrame, id_col: str, seen_path: str
+) -> DataFrame | None:
+    """The exactly-once guard of the three ingest twins: ``None`` for an
+    empty micro-batch, else the batch collapsed to one row per id
+    (:func:`_dedupe_batch_ids`) minus the ids already stored at
+    ``seen_path``.
+
+    Both halves are needed. The anti-join only blocks cross-batch
+    re-delivery, and two same-id rows in ONE micro-batch would otherwise
+    both append. The result is lazy: each caller pins its survivor set
+    (``localCheckpoint``) at the point its own appends require.
+    """
+    if not batch_df.take(1):
+        return None
+    batch_df = _dedupe_batch_ids(batch_df, id_col)
+    spark = batch_df.sparkSession
+    if not path_exists(spark, seen_path):
+        return batch_df
+    return batch_df.join(
+        spark.read.parquet(seen_path).select(F.col(id_col)),
+        on=id_col,
+        how="left_anti",
     )
 
 
@@ -113,34 +146,25 @@ def streaming_dedup_ingest(
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not batch_df.take(1):
+        keep = _unseen_rows(batch_df, id_col, corpus_path)
+        if keep is None:
             return
-        # per-id exactly-once: the corpus anti-join only guards
-        # cross-batch re-delivery — two same-id rows in ONE micro-batch
-        # would both append (same contract as the semdedup twin);
-        # deterministic winner so checkpoint replays converge
-        batch_df = _dedupe_batch_ids(batch_df, id_col)
-        corpus_exists = os.path.exists(corpus_path)
-        if corpus_exists:
-            corpus = spark.read.parquet(corpus_path)
+        if path_exists(spark, corpus_path):
+            # the corpus holds appended batch rows, so the batch's schema
+            # is the corpus schema: no second schema-inference job on top
+            # of the one the id guard's read already paid
+            corpus = spark.read.schema(keep.schema).parquet(corpus_path)
             index = spark.read.parquet(index_path)
-            fresh = batch_df.join(
-                corpus.select(F.col(id_col)),
-                on=id_col,
-                how="left_anti",
-            )
             dups = near_dup_against_index(
-                fresh, index, corpus, id_col, text_col,
+                keep, index, corpus, id_col, text_col,
                 threshold=threshold, num_hashes=num_hashes,
                 band_size=band_size, shingle_n=shingle_n,
             )
-            keep = fresh.join(
+            keep = keep.join(
                 dups.select(F.col("new_id").alias(id_col)).distinct(),
                 on=id_col,
                 how="left_anti",
             )
-        else:
-            keep = batch_df
         # localCheckpoint pins the survivor set: the corpus append below
         # changes what the index/corpus reads would return, so `keep` must
         # not be lazily recomputed against the post-append state
@@ -229,19 +253,9 @@ def streaming_line_dedup_ingest(
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not batch_df.take(1):
+        batch_df = _unseen_rows(batch_df, id_col, out_path)
+        if batch_df is None:
             return
-        # per-id exactly-once: the out_path anti-join only guards
-        # cross-batch re-delivery — two same-id rows in ONE micro-batch
-        # would both clean-and-append (same contract as the other twins);
-        # deterministic winner so checkpoint replays converge
-        batch_df = _dedupe_batch_ids(batch_df, id_col)
-        if os.path.exists(out_path):
-            batch_df = batch_df.join(
-                spark.read.parquet(out_path).select(F.col(id_col)),
-                on=id_col,
-                how="left_anti",
-            )
         # pin the survivor set: the appends below change what out_path /
         # index_path reads would return on lazy recompute
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -315,11 +329,6 @@ def compact_line_df_index(spark, index_path: str) -> dict:
     """
     import uuid
 
-    from automotive_data_pipeline_demo_spark.sources.compact import (
-        plan_compaction,
-        swap_directory,
-    )
-
     plan = plan_compaction(spark, index_path)
     before = plan["n_files"]
     folded = (
@@ -383,13 +392,7 @@ def compact_band_index(
     Returns ``{"rows_before", "rows_after", "retired_rows",
     "files_before", "files_after"}``.
     """
-    import shutil
     import uuid
-
-    from automotive_data_pipeline_demo_spark.sources.compact import (
-        plan_compaction,
-        swap_directory,
-    )
 
     plan = plan_compaction(spark, index_path)
     files_before = plan["n_files"]
@@ -410,7 +413,7 @@ def compact_band_index(
     )
     n_staged = spark.read.parquet(staging).count()
     if n_staged != n_expected:
-        shutil.rmtree(staging, ignore_errors=True)
+        delete_path(spark, staging)
         raise ValueError(
             f"compact_band_index: staged rewrite changed the row set "
             f"({n_expected} retained rows -> {n_staged} staged) — the "
@@ -497,20 +500,11 @@ def streaming_semdedup_ingest(
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not batch_df.take(1):
+        # the pair stage filters same-id pairs (a_id != b_id), so the
+        # guard's in-batch id collapse is what keeps corpus ids unique
+        batch_df = _unseen_rows(batch_df, id_col, corpus_path)
+        if batch_df is None:
             return
-        # per-id exactly-once needs BOTH guards: the anti-join only blocks
-        # cross-batch re-delivery, and the pair stage filters same-id pairs
-        # (a_id != b_id), so two same-id rows in ONE micro-batch would both
-        # append and leave duplicate ids in the corpus index;
-        # deterministic winner so checkpoint replays converge
-        batch_df = _dedupe_batch_ids(batch_df, id_col)
-        if os.path.exists(corpus_path):
-            batch_df = batch_df.join(
-                spark.read.parquet(corpus_path).select(F.col(id_col)),
-                on=id_col,
-                how="left_anti",
-            )
         # pin the survivor set: the corpus append below changes what a
         # lazy recompute of the anti-join would return
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -527,7 +521,7 @@ def streaming_semdedup_ingest(
             batch_df, cents, id_col=id_col, vec_col=vec_col,
             route_probe=route_probe, keep_cols=(vec_col,),
         )
-        if os.path.exists(corpus_path):
+        if path_exists(spark, corpus_path):
             pool = (
                 spark.read.parquet(corpus_path)
                 .select(id_col, vec_col, "centroid_id")
@@ -657,15 +651,11 @@ def refresh_centroids(
     "moved"}`` where ``moved`` counts rows whose cell changed.
     """
     import math
-    import shutil
     import uuid
 
     from automotive_data_pipeline_demo_spark.extensions.similarity import (
         assign_to_stored_centroids,
         kmeans_centroids,
-    )
-    from automotive_data_pipeline_demo_spark.sources.compact import (
-        swap_directory,
     )
 
     corpus = spark.read.parquet(corpus_path)
@@ -712,8 +702,8 @@ def refresh_centroids(
     staged = spark.read.parquet(corp_staging)
     n_after = staged.count()
     if n_after != n:
-        shutil.rmtree(corp_staging, ignore_errors=True)
-        shutil.rmtree(cent_staging, ignore_errors=True)
+        delete_path(spark, corp_staging)
+        delete_path(spark, cent_staging)
         raise ValueError(
             f"refresh_centroids: re-assignment would change the corpus "
             f"({n} rows -> {n_after}) — kept-stays-kept violated; the "

@@ -27,6 +27,17 @@ def ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
 
 
+def lake_path(path, uri: bool) -> str:
+    """``path`` as a plain local path, or as a ``file://`` URI: the form a
+    deployed lake passes (``hdfs://``, ``s3a://``), for which a local
+    ``os.path`` probe is always False."""
+    return path.as_uri() if uri else str(path)
+
+
+# the ingest twins run once on plain paths and once on URI paths
+URI_CASES = pytest.mark.parametrize("uri", [False, True], ids=["plain", "file_uri"])
+
+
 # ---------------------------------------------------------------- ST1 merge
 
 def test_merge_upsert_idempotent(spark, tmp_path):
@@ -305,6 +316,72 @@ def test_merge_upsert_stage2_failure_preserves_staging(spark, tmp_path, monkeypa
     assert staged, "staging path must survive a failed commit"
     recovered = spark.read.schema(update.schema).parquet(staged[0])
     assert [r["price"] for r in recovered.collect()] == [9.0]
+
+
+def test_merge_upsert_failed_target_read_raises(spark, tmp_path, monkeypatch):
+    """A failing read of an EXISTING target must raise, not be taken for
+    an absent table: the absent-table branch overwrites the target with
+    the batch alone, which would wipe every other row."""
+    import pyspark.sql.session as _sess
+
+    target = str(tmp_path / "sales6")
+    batch = spark.createDataFrame(
+        [Row(dealno="D1", price=1.0, sale_year=2025,
+             updated=ts("2025-01-01T00:00")),
+         Row(dealno="D2", price=2.0, sale_year=2025,
+             updated=ts("2025-01-01T00:00"))]
+    )
+    merge_upsert(spark, target, batch, keys=["dealno"], order_by=["updated"],
+                 partition_cols=["sale_year"])
+
+    real_read = _sess.SparkSession.read
+
+    def failing_read(self):  # e.g. a transient listing error on the target
+        raise RuntimeError("injected target read failure")
+
+    update = spark.createDataFrame(
+        [Row(dealno="D1", price=9.0, sale_year=2025,
+             updated=ts("2025-01-02T00:00"))]
+    )
+    monkeypatch.setattr(_sess.SparkSession, "read", property(failing_read))
+    try:
+        with pytest.raises(RuntimeError, match="injected target read failure"):
+            merge_upsert(spark, target, update, keys=["dealno"],
+                         order_by=["updated"], partition_cols=["sale_year"])
+    finally:
+        monkeypatch.setattr(_sess.SparkSession, "read", real_read)
+
+    rows = spark.read.schema(batch.schema).parquet(target).collect()
+    assert sorted((r["dealno"], r["price"]) for r in rows) == [
+        ("D1", 1.0), ("D2", 2.0)
+    ]
+
+
+def test_lake_storage_goes_through_merge_helpers():
+    """Every Hadoop-FS call of the package lives in sources/merge.py
+    (path_exists, delete_path, swap_directory, _hadoop_fs), and the lake
+    modules never probe or delete with local-only ``os.path``/``shutil``
+    calls, which are wrong for every URI path (hdfs://, s3a://)."""
+    from pathlib import Path
+
+    import automotive_data_pipeline_demo_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    hadoop = [
+        str(f.relative_to(root))
+        for f in sorted(root.rglob("*.py"))
+        if f != root / "sources" / "merge.py"
+        and any(t in f.read_text() for t in ("getFileSystem", "org.apache.hadoop.fs"))
+    ]
+    assert hadoop == [], hadoop
+    lake = [*(root / "sources").rglob("*.py"), *(root / "streaming").rglob("*.py"),
+            root / "plans" / "refresh.py"]
+    local = [
+        str(f.relative_to(root))
+        for f in sorted(lake)
+        if any(t in f.read_text() for t in ("os.path.exists", "shutil.rmtree"))
+    ]
+    assert local == [], local
 
 
 # ----------------------------------------------------------- ST2 exactly-once
@@ -639,7 +716,8 @@ def test_streaming_activation_exactly_once_across_batches(spark, tmp_path):
     assert deals == ["D1", "D2", "D3"]
 
 
-def test_streaming_dedup_ingest_drops_near_dups_across_batches(spark, tmp_path):
+@URI_CASES
+def test_streaming_dedup_ingest_drops_near_dups_across_batches(spark, tmp_path, uri):
     """Two micro-batches stream in: batch 1 seeds the corpus, batch 2
     contains a near-dup of a batch-1 doc (dropped), an exact re-delivery
     (dropped by the id guard), and a novel doc (kept). The index grows with
@@ -651,8 +729,8 @@ def test_streaming_dedup_ingest_drops_near_dups_across_batches(spark, tmp_path):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
     schema = "doc_id long, text string"
     src = tmp_path / "incoming"
-    corpus_path = str(tmp_path / "corpus")
-    index_path = str(tmp_path / "index")
+    corpus_path = lake_path(tmp_path / "corpus", uri)
+    index_path = lake_path(tmp_path / "index", uri)
 
     b1 = [(1, base),
           (2, "distinct seed document about watermark semantics and "
@@ -813,7 +891,8 @@ def test_streaming_dq_gate_per_batch(spark, tmp_path):
     assert "fk:cust" in bad_checks  # pk 3 -> cust 99 has no dimension row
 
 
-def test_streaming_line_dedup_accumulates_df_across_batches(spark, tmp_path):
+@URI_CASES
+def test_streaming_line_dedup_accumulates_df_across_batches(spark, tmp_path, uri):
     """Cross-batch line-df accumulation matches the batch operator on the
     unioned corpus: a line seen once in batch 1 is not yet boilerplate
     (batch-1 docs keep it), but its accumulated df reaches the threshold
@@ -826,8 +905,8 @@ def test_streaming_line_dedup_accumulates_df_across_batches(spark, tmp_path):
 
     schema = "doc_id long, text string"
     src = tmp_path / "incoming"
-    out = str(tmp_path / "cleaned")
-    idx = str(tmp_path / "line_index")
+    out = lake_path(tmp_path / "cleaned", uri)
+    idx = lake_path(tmp_path / "line_index", uri)
 
     b1 = [(1, "boiler\nalpha one"), (2, "unique two\n\nafter blank")]
     b2 = [
@@ -971,7 +1050,8 @@ def test_line_df_index_compaction_preserves_accumulation(spark, tmp_path):
     assert got[bh] == 2
 
 
-def test_streaming_semdedup_ingest_accumulates_and_replays(spark, tmp_path):
+@URI_CASES
+def test_streaming_semdedup_ingest_accumulates_and_replays(spark, tmp_path, uri):
     """The stored-centroid streaming ingest twin: batch vectors near-dup
     against the accepted corpus AND earlier arrivals (prefix semantics —
     a batch-2 vector duplicating a batch-1 survivor is dropped), in-batch
@@ -994,8 +1074,8 @@ def test_streaming_semdedup_ingest_accumulates_and_replays(spark, tmp_path):
     seeds = corpus.filter(F.col("vec_id").isin(0, 10)).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_vec")
     )
-    cents_path = str(tmp_path / "cents")
-    corpus_path = str(tmp_path / "corpus")
+    cents_path = lake_path(tmp_path / "cents", uri)
+    corpus_path = lake_path(tmp_path / "corpus", uri)
     kmeans_centroids(corpus, seeds, n_iter=1).write.parquet(cents_path)
     stored_cents = spark.read.parquet(cents_path)
     assign_to_stored_centroids(corpus, stored_cents).join(corpus, "vec_id").select(
